@@ -1,59 +1,135 @@
-"""Spark-Connect-safe accessors for the two ``SparkContext`` reads the
-engine needs (round-12 verdict item 3).
+"""The staging layer: one shuffle-width rule, one store for staged
+relations, and the Spark-Connect-safe application id.
 
-A Spark Connect client has no ``SparkSession.sparkContext`` — the
-attribute raises ``PySparkAttributeError`` — so any operator touching it
-breaks the moment a user points the package at a Connect endpoint (the
-deployment shape a 1000-executor shared cluster actually serves).
-Everything else the engine uses is Connect-clean in Spark 4
-(``DataFrame.localCheckpoint`` included, added to Connect in 4.0); the
-two classic-only reads are wrapped here with documented fallbacks
-instead of being sprinkled across operators:
+**Width rule.** ``shuffle_width(spark)`` is ``spark.sql.shuffle.partitions``
+capped at the session's task slots (``defaultParallelism``; on Spark
+Connect, which has no ``SparkContext``, the conf alone). Every explicit
+``repartition(n, key)`` that co-locates a join or spreads a skewed build
+side is sized by it, and ``staged_checkpoint`` plans its statement with
+``shuffle.partitions`` set to it, so a staged layout and the staged
+aggregates that join it are both ``hashpartitioning(key, n)`` at the same
+``n`` and those round joins plan with no exchange at any conf value.
 
-- ``default_parallelism``: sizes ``repartition(n, key)`` calls that
-  co-locate a join or spread a skewed build side. On classic this is
-  ``sc.defaultParallelism`` (cluster core count — the established
-  behavior everywhere the engine already runs); on Connect it falls
-  back to ``spark.sql.shuffle.partitions``, the knob that already sizes
-  every other shuffle in the same plans, so the fallback degrades to
-  "no worse than the neighboring exchanges".
-- ``application_id``: used only as a per-application cache key for
-  staged relations (BM25 posting store, trimmed graph edges). On
-  Connect, ``spark.app.id`` is a plain runtime conf read; the final
-  fallback keys on the session object identity, which over-invalidates
-  (new key per session) but never under-invalidates.
+The explicit count is kept on purpose. AQE coalesces a tiny input to one
+partition, which would run a Python-heavy stage on one core; an explicit
+count keeps it spread over the slots. AQE does not coalesce a user-given
+count either, so the cap matters where ``shuffle.partitions`` exceeds the
+slots: without it a vanilla session's 200 runs each explicit repartition
+as 200 tiny tasks (at local[8] on a 4-core host, the affected sf0.01
+queries took twice as long). ``get_spark`` sets the conf to the local
+thread count, where the cap changes nothing.
 
-The grep contract in tests/test_plan_audit.py pins ``sparkContext`` to
-exactly this module plus the two documented classic-only surfaces
-(session.py's log-level call in our own non-Connect builder, and the
+**Staged relations.** ``stage(spark, name, inputs, build)`` is the one
+session store for relations built once and reused by later queries
+(co-purchase edges, the undirected BFS layout, the BM25 index and
+store):
+
+- key: the application id, ``name``, the shuffle width (every staged
+  relation is laid out at the width it was built at), ``inputs`` (a
+  file or a directory), and the path, size and mtime of every file
+  under it. A rewritten input or a changed width changes the key, so no
+  query reads a relation staged from the old files or at the old width.
+  A path that is not on the local file system has no files to
+  fingerprint: its entry lives until its name is staged again under
+  another key.
+- eviction: one entry per ``name``, so the store holds one input set
+  per name: two fixture directories used in turn rebuild the relation
+  at every switch. A new key replaces the old entry, and dropping the
+  reference is all eviction does — ``DataFrame.unpersist`` does not
+  reach ``localCheckpoint`` blocks or a table. Spark's context cleaner
+  frees the checkpoint blocks once the evicted frame is
+  garbage-collected, so a caller still holding it keeps working.
+- lock: one reentrant lock guards the store and ``staged_checkpoint``'s
+  conf flips. Builds that stage inside a build re-enter it; two threads
+  staging at once run one after the other, and the flip always restores
+  the value it found.
+
+In local mode a staged relation is an eager ``localCheckpoint``
+(``staged_checkpoint`` when a consumer joins on its hash partitioning).
+In cluster mode it is a bucketed table a nightly job writes once;
+``search_bm25_store_bucketed`` is that form made executable
+(``saveAsTable`` bucketed by term). Both go through ``stage``.
+
+**Connect.** A Spark Connect client has no ``SparkSession.sparkContext``
+(the attribute raises ``PySparkAttributeError``). The engine makes two
+classic-only reads: ``application_id`` falls back to the ``spark.app.id``
+conf, and ``shuffle_width`` drops its slot cap. The grep contract in
+tests/test_plan_audit.py pins ``sparkContext`` to exactly those two reads
+plus session.py's log-level call in our own classic builder (the
 vendored protobuf runtime is excluded wholesale), so a new classic-only
 touch anywhere else fails the suite.
 """
 
 from __future__ import annotations
 
+import os
+import threading
+from typing import Callable, TypeVar
+
 from pyspark.errors import PySparkAttributeError
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+
+T = TypeVar("T")
+
+_LOCK = threading.RLock()
+# name -> (key, staged value); one entry per name.
+_STORE: dict[str, tuple[tuple, object]] = {}
 
 
-def default_parallelism(spark: SparkSession) -> int:
-    """Classic ``sc.defaultParallelism``; on Connect (no sparkContext)
-    fall back to ``spark.sql.shuffle.partitions`` — the width every
-    neighboring exchange in the same plan already uses."""
+def shuffle_width(spark: SparkSession) -> int:
+    """The one width rule: ``spark.sql.shuffle.partitions``, capped at the
+    task slots on a classic session (see the module docstring)."""
+    width = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
     try:
-        return spark.sparkContext.defaultParallelism
+        return min(width, spark.sparkContext.defaultParallelism)
     except PySparkAttributeError:
-        # The Connect signature EXACTLY — not bare AttributeError: a
-        # STOPPED classic SparkContext raises plain AttributeError too
-        # (SparkContext.stop() sets _jsc=None, so defaultParallelism
-        # dereferences None — round-14 review verified against pyspark
-        # 4.1.2 source), and that is a real classic-session error which
-        # must propagate, not silently resize the repartition
-        # (r13 advice, tightened r14).
-        return int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
+        # Spark Connect: no SparkContext. The exact Connect signature,
+        # as in application_id — a stopped classic context raises plain
+        # AttributeError, which must propagate.
+        return width
 
 
-def staged_checkpoint(df: "DataFrame") -> "DataFrame":  # noqa: F821
+def _fingerprint(path: str) -> tuple:
+    """(path, size, mtime_ns) of every file under ``path``."""
+    if os.path.isfile(path):
+        files = [path]
+    else:
+        files = sorted(
+            os.path.join(root, f) for root, _, fs in os.walk(path) for f in fs
+        )
+    out = []
+    for f in files:
+        st = os.stat(f)
+        out.append((f, st.st_size, st.st_mtime_ns))
+    return tuple(out)
+
+
+def stage(
+    spark: SparkSession, name: str, inputs: str, build: Callable[[], T]
+) -> T:
+    """Return the relation staged under ``name`` for the current
+    application and the current files under ``inputs``, calling
+    ``build()`` (a DataFrame or a tuple of DataFrames) when there is
+    none. The store holds one input set per name: staging a name from
+    another directory replaces the entry. See the module docstring for
+    the key, eviction and lock."""
+    key = (
+        application_id(spark),
+        name,
+        shuffle_width(spark),
+        inputs,
+        _fingerprint(inputs),
+    )
+    with _LOCK:
+        old = _STORE.get(name)
+        if old is not None and old[0] == key:
+            return old[1]  # type: ignore[return-value]
+        value = build()
+        _STORE[name] = (key, value)
+        return value
+
+
+def staged_checkpoint(df: DataFrame) -> DataFrame:
     """Eager ``localCheckpoint`` that KEEPS the plan's hash partitioning
     visible to Catalyst (r18, guide §2.1/§2.4).
 
@@ -70,16 +146,25 @@ def staged_checkpoint(df: "DataFrame") -> "DataFrame":  # noqa: F821
     ``hashpartitioning(key, n)``, which ``LogicalRDD`` then preserves
     for every later consumer (those consumers still plan under AQE).
     The staging job itself is a deterministic repartition/aggregate —
-    nothing AQE would improve — and the conf flip is scoped to this
-    call on the session's single query-construction thread."""
+    nothing AQE would improve. The statement is also planned with
+    ``shuffle.partitions`` at ``shuffle_width``, so an aggregate staged
+    here lands at the width of the layouts it joins. Both flips hold the
+    store's lock, so concurrent callers cannot leave either conf
+    changed."""
     spark = df.sparkSession
-    key = "spark.sql.adaptive.enabled"
-    prev = spark.conf.get(key, "true")
-    spark.conf.set(key, "false")
-    try:
-        return df.localCheckpoint(eager=True)
-    finally:
-        spark.conf.set(key, prev)
+    flips = {
+        "spark.sql.adaptive.enabled": "false",
+        "spark.sql.shuffle.partitions": str(shuffle_width(spark)),
+    }
+    with _LOCK:
+        prev = {k: spark.conf.get(k) for k in flips}
+        for k, v in flips.items():
+            spark.conf.set(k, v)
+        try:
+            return df.localCheckpoint(eager=True)
+        finally:
+            for k, v in prev.items():
+                spark.conf.set(k, v)
 
 
 def application_id(spark: SparkSession) -> str:
@@ -89,10 +174,12 @@ def application_id(spark: SparkSession) -> str:
     try:
         return spark.sparkContext.applicationId
     except PySparkAttributeError:
-        # Connect-only shape (see default_parallelism). A missing
+        # The Connect signature EXACTLY — not bare AttributeError: a
+        # STOPPED classic SparkContext raises plain AttributeError too
+        # (SparkContext.stop() sets _jsc=None), and that is a real
+        # classic-session error which must propagate. A missing
         # spark.app.id conf on the Connect side is tolerated — the
-        # session-identity key over-invalidates, never under-invalidates
-        # — but a classic-session failure propagates.
+        # session-identity key over-invalidates, never under-invalidates.
         try:
             app_id = spark.conf.get("spark.app.id", None)
         except Exception:

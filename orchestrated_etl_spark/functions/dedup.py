@@ -33,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from orchestrated_etl_spark.compat import default_parallelism
+from orchestrated_etl_spark.compat import shuffle_width
 from orchestrated_etl_spark.functions.text import tokens
 
 
@@ -139,7 +139,7 @@ def jaccard_pairs(
     # parallelize per-doc set construction even from a one-file scan, and
     # keep AQE from coalescing the byte-small exchange to one partition.
     df = df.repartition(
-        default_parallelism(df.sparkSession), F.col(id_col)
+        shuffle_width(df.sparkSession), F.col(id_col)
     )
     ex = _exploded_sets(df, id_col, set_col)
     if max_df is not None:
@@ -193,7 +193,7 @@ def containment_pairs(
     division of exact counts — engine-independent up to the shared
     round(6)."""
     df = df.repartition(
-        default_parallelism(df.sparkSession), F.col(id_col)
+        shuffle_width(df.sparkSession), F.col(id_col)
     )
     ex = _exploded_sets(df, id_col, set_col)
     if max_df is not None:
@@ -449,7 +449,7 @@ def minhash_lsh_dedup(
     # optimizing for bytes-per-partition when the cost here is
     # compute-per-row.
     df = df.repartition(
-        default_parallelism(df.sparkSession), F.col(id_col)
+        shuffle_width(df.sparkSession), F.col(id_col)
     )
     if text_col is not None:
         # text fast path: signature from window-lead shingle rows (no
@@ -549,7 +549,7 @@ def incremental_minhash_flags(
     cost: O(|batch|) signature work + bucket-join against the store +
     O(|candidates|) verification."""
     _check_banding(k, bands, rows_per_band)
-    par = default_parallelism(incoming.sparkSession)
+    par = shuffle_width(incoming.sparkSession)
     inc = incoming.repartition(par, F.col(id_col))
     hist = history.repartition(par, F.col(id_col))
     sigs_h = minhash_signature_text(
@@ -702,7 +702,7 @@ def embedding_near_dup(
     arithmetic."""
     # Explicit-count repartition: the per-pair dot products must spread
     # across cores even from a one-row-group file (see minhash_lsh_dedup).
-    par = default_parallelism(df.sparkSession)
+    par = shuffle_width(df.sparkSession)
     base = (
         df.repartition(par, F.col(id_col))
         .select(

@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from orchestrated_etl_spark.compat import default_parallelism, staged_checkpoint
+from orchestrated_etl_spark.compat import shuffle_width, staged_checkpoint
 
 
 def copurchase_edges(
@@ -384,7 +384,7 @@ def bfs_distances(
         if u_layout is not None
         else staged_checkpoint(
             undirect(edges).repartition(
-                default_parallelism(spark), F.col("src")
+                shuffle_width(spark), F.col("src")
             )
         )
     )
@@ -450,7 +450,7 @@ def shortest_path_bf(
                 F.col("weight").cast("long").alias("w"),
             )
         )
-        .repartition(default_parallelism(spark), F.col("src"))
+        .repartition(shuffle_width(spark), F.col("src"))
     )
     dist = spark.range(1).select(
         F.lit(seed).cast("long").alias("node"),

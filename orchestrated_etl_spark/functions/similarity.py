@@ -25,7 +25,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from orchestrated_etl_spark.compat import default_parallelism
+from orchestrated_etl_spark.compat import shuffle_width
 from orchestrated_etl_spark.functions.dedup import cosine, dot, vec_norm
 
 
@@ -65,7 +65,7 @@ def brute_force_topk(
         q = F.broadcast(q)
     # Corpus side carries the |Q|·|C| dot-product work — spread it across
     # cores explicitly (one-row-group fixture files scan as 1 partition).
-    par = default_parallelism(corpus.sparkSession)
+    par = shuffle_width(corpus.sparkSession)
     c = (
         corpus.repartition(par, F.col(id_col))
         .select(
@@ -133,7 +133,7 @@ def assign_to_centroids(
         F.col(vec_col).alias("_cenvec"),
         vec_norm(F.col(vec_col)).alias("_cennorm"),
     )
-    par = default_parallelism(corpus.sparkSession)
+    par = shuffle_width(corpus.sparkSession)
     if nprobe == 1:
         # Argmax as a MAP-ONLY fold over a broadcast 1-row centroid
         # ARRAY (r18, guide §2.4/§5): the earlier max_by aggregate never
@@ -437,7 +437,7 @@ def sq8_topk(
     # exchange per consumer run), so the checkpointed index is already
     # spread across cores for the |Q|·|C| scoring pass — exactly how
     # the staged index would be written pre-partitioned at scale.
-    par = default_parallelism(corpus.sparkSession)
+    par = shuffle_width(corpus.sparkSession)
     q8 = sq8_quantize(
         corpus.select(F.col(id_col), F.col(vec_col)).repartition(
             par, F.col(id_col)

@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from orchestrated_etl_spark.compat import application_id, default_parallelism
+from orchestrated_etl_spark.compat import shuffle_width, stage, staged_checkpoint
 from orchestrated_etl_spark.functions.graph import (
     copurchase_edges,
     degrees,
@@ -56,60 +56,46 @@ _EDGE_CTE = """
 # ---------------------------------------------------------------------------
 
 
-# Materialize-once edge store: (applicationId, sf_dir, min_weight) ->
-# eagerly checkpointed edge relation. Every graph query in this module
-# starts from the same derived co-purchase edges; without the cache each
-# query re-runs the two fact-table shuffles of the derivation (the
-# per-query fixed cost SCALING.md documents, ~1.6 s at sf0.1 — and at
-# 100 TB, two fact-scale shuffles per query). This is the same session
-# cache pattern as the BM25 index: on a cluster it is the staged edges
-# table the nightly graph job writes once and every query reads.
-_EDGE_CACHE: dict[tuple[str, str, int], DataFrame] = {}
-
-
+# Every graph query in this module starts from the same derived
+# co-purchase edges; staging them once per session (compat.stage) saves
+# each query the two fact-table shuffles of the derivation (the
+# per-query fixed cost SCALING.md documents, ~1.6 s at sf0.1). On a
+# cluster this is the staged edges table the nightly graph job writes
+# once and every query reads.
 def cached_edges(
     spark: SparkSession, sf_dir: str, min_weight: int = 2
 ) -> DataFrame:
-    key = (application_id(spark), sf_dir, min_weight)
-    if key not in _EDGE_CACHE:
-        if len(_EDGE_CACHE) > 8:  # one fixture's relations at a time
-            _EDGE_CACHE.clear()
-        _EDGE_CACHE[key] = copurchase_edges(
+    return stage(
+        spark,
+        f"graph.edges/w{min_weight}",
+        f"{sf_dir}/lineitem.parquet",
+        lambda: copurchase_edges(
             spark, sf_dir, min_weight=min_weight
-        ).localCheckpoint(eager=True)
-    return _EDGE_CACHE[key]
-
-
-_ULAYOUT_CACHE: dict[tuple[str, str, int], DataFrame] = {}
+        ).localCheckpoint(eager=True),
+    )
 
 
 def cached_undirected_layout(
     spark: SparkSession, sf_dir: str, min_weight: int = 1
 ) -> DataFrame:
-    """Session-cached UNDIRECTED (src, dst) edge layout, hash-
-    partitioned by src and pinned with a checkpoint — the per-round
-    probe side every iterative traversal (BFS, Bellman-Ford) joins
-    its frontier against. Building it costs an edge-sized shuffle
+    """Session-staged UNDIRECTED (src, dst) edge layout, hash-
+    partitioned by src at the shuffle width (part of the stage key, so
+    a changed width restages the layout) and pinned with
+    staged_checkpoint (a plain localCheckpoint under AQE loses the
+    hashpartitioning(src) this layout exists to provide) — the
+    per-round probe side every iterative traversal (BFS, Bellman-Ford)
+    joins its frontier against. Building it costs an edge-sized shuffle
     (~0.8 s at sf0.1 on the dense graph); on a cluster this IS the
-    bucketed-by-src edges table the nightly graph job stages once, so
-    caching it per session is the honest local stand-in (same argument
-    as cached_edges / the BM25 index)."""
-    key = (application_id(spark), sf_dir, min_weight)
-    if key not in _ULAYOUT_CACHE:
-        if len(_ULAYOUT_CACHE) > 4:
-            _ULAYOUT_CACHE.clear()
-        from orchestrated_etl_spark.compat import staged_checkpoint
-        from orchestrated_etl_spark.functions.graph import undirect
-
-        # staged_checkpoint (r18): a plain localCheckpoint under AQE
-        # loses the hashpartitioning(src) this layout exists to provide
-        # — every traversal round was silently re-exchanging it.
-        u = staged_checkpoint(
+    bucketed-by-src edges table the nightly graph job stages once."""
+    return stage(
+        spark,
+        f"graph.undirected_layout/w{min_weight}",
+        f"{sf_dir}/lineitem.parquet",
+        lambda: staged_checkpoint(
             undirect(cached_edges(spark, sf_dir, min_weight=min_weight))
-            .repartition(default_parallelism(spark), F.col("src"))
-        )
-        _ULAYOUT_CACHE[key] = u
-    return _ULAYOUT_CACHE[key]
+            .repartition(shuffle_width(spark), F.col("src"))
+        ),
+    )
 
 
 def _graph_edges(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -34,7 +34,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from orchestrated_etl_spark.compat import application_id
+from orchestrated_etl_spark.compat import stage
 from orchestrated_etl_spark.registry import register
 
 _BM25_TERMS = ["spark", "window", "merge"]
@@ -51,16 +51,12 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-# Materialize-once index cache: (applicationId, sf_dir) -> True once the
-# bm25_postings / bm25_dfreq / bm25_stats temp views are checkpointed and
-# registered for that session+fixture. The same pattern as the MinHash
-# signature / SQ8 quantized-relation checkpoints: the corpus is scanned
-# ONCE to build the index, every subsequent query is a posting-list lookup.
-_BM25_INDEX_BUILT: dict[tuple[str, str], bool] = {}
+_BM25_VIEWS = ("bm25_postings", "bm25_dfreq", "bm25_stats")
 
 
 def _bm25_index(spark: SparkSession, sf_dir: str) -> None:
-    """Build (once per session+fixture) the staged BM25 retrieval index:
+    """Stage (once per session and documents file set, compat.stage) the
+    BM25 retrieval index and register its temp views:
 
     - ``bm25_postings`` (doc_id, term, tf, dl) — the FULL inverted index,
       one explode + one (doc,term) aggregate over the corpus;
@@ -70,22 +66,29 @@ def _bm25_index(spark: SparkSession, sf_dir: str) -> None:
     Each relation is localCheckpoint(eager=True)'d, so queries never
     re-derive corpus statistics — round 2's plan audit showed 6-8 corpus
     scans per BM25/RRF query because df/dl/avgdl recomputed every time;
-    now the corpus is scanned exactly once at build. On a cluster the
-    checkpoint becomes a staged parquet write BUCKETED BY term, giving
-    per-term partition pruning on the posting lookup; localCheckpoint is
-    the single-node stand-in (same plan shape above the scan)."""
-    key = (application_id(spark), sf_dir)
-    if _BM25_INDEX_BUILT.get(key):
-        return
-    build_bm25_index(_docs(spark, sf_dir))
-    _BM25_INDEX_BUILT.clear()  # one fixture's views are live at a time
-    _BM25_INDEX_BUILT[key] = True
+    now the corpus is scanned exactly once at build. The views are
+    re-registered from the staged frames on every call, so a new session
+    of the same application sees them too. On a cluster the checkpoint
+    becomes a staged parquet write BUCKETED BY term (_bm25_store)."""
+    frames = stage(
+        spark,
+        "search.bm25_index",
+        f"{sf_dir}/documents.parquet",
+        lambda: build_bm25_index(_docs(spark, sf_dir)),
+    )
+    _register_bm25_views(frames)
 
 
-def build_bm25_index(docs: DataFrame) -> None:
+def _register_bm25_views(frames: tuple[DataFrame, ...]) -> None:
+    for view, df in zip(_BM25_VIEWS, frames):
+        df.createOrReplaceTempView(view)
+
+
+def build_bm25_index(docs: DataFrame) -> tuple[DataFrame, ...]:
     """Build + register the staged index views from a documents frame
-    (split out so scaling measurements drive the identical build on
-    synthetically grown corpora)."""
+    and return the (postings, dfreq, stats) frames (split out so scaling
+    measurements drive the identical build on synthetically grown
+    corpora)."""
     tokens = docs.select(
         "doc_id",
         F.size(F.split("text", " ")).alias("dl"),
@@ -105,9 +108,9 @@ def build_bm25_index(docs: DataFrame) -> None:
         F.count(F.lit(1)).alias("n_docs"),
         F.avg(F.size(F.split("text", " "))).alias("avgdl"),
     ).localCheckpoint(eager=True)
-    postings.createOrReplaceTempView("bm25_postings")
-    dfreq.createOrReplaceTempView("bm25_dfreq")
-    stats.createOrReplaceTempView("bm25_stats")
+    frames = (postings, dfreq, stats)
+    _register_bm25_views(frames)
+    return frames
 
 
 def _search_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -678,21 +681,30 @@ register(
 # BM25 over a BUCKETED posting store (bucket-pruned lookups)
 # ---------------------------------------------------------------------------
 
-_BM25_STORE_BUILT: dict[tuple[str, str], bool] = {}
 _BM25_BUCKETS = 16
+_BM25_TABLES = ("bm25_postings_tbl", "bm25_dfreq_tbl", "bm25_stats_tbl")
 
 
 def _bm25_store(spark: SparkSession, sf_dir: str) -> None:
     """The durable form of the staged BM25 index: postings WRITTEN AS A
-    BUCKETED TABLE (bucketBy term), plus df and 1-row stats tables. A
+    BUCKETED TABLE (bucketBy term), plus df and 1-row stats tables,
+    staged once per session and documents file set (compat.stage). A
     term-filtered lookup then reads only the term's hash buckets —
     Spark's bucket pruning (`SelectedBucketsCount: k of 16` in the scan,
     plan-asserted in tests) — which is the localCheckpoint variant's
     documented 100 TB posture made executable: the index survives the
     session and a q-term query touches ~q/16 of the posting files."""
-    key = (application_id(spark), sf_dir)
-    if _BM25_STORE_BUILT.get(key):
-        return
+    stage(
+        spark,
+        "search.bm25_store",
+        f"{sf_dir}/documents.parquet",
+        lambda: _write_bm25_store(spark, sf_dir),
+    )
+
+
+def _write_bm25_store(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, ...]:
     # The in-memory catalog starts empty each session, but the warehouse
     # directory persists — clear stale locations first (the
     # join_bucketed_colocated pattern).
@@ -701,7 +713,7 @@ def _bm25_store(spark: SparkSession, sf_dir: str) -> None:
     from urllib.parse import urlparse
 
     wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    for tbl in ("bm25_postings_tbl", "bm25_dfreq_tbl", "bm25_stats_tbl"):
+    for tbl in _BM25_TABLES:
         if not spark.catalog.tableExists(tbl):
             shutil.rmtree(os.path.join(wh, tbl), ignore_errors=True)
     docs = _docs(spark, sf_dir)
@@ -730,8 +742,7 @@ def _bm25_store(spark: SparkSession, sf_dir: str) -> None:
         F.count(F.lit(1)).alias("n_docs"),
         F.avg(F.size(F.split("text", " "))).alias("avgdl"),
     ).write.mode("overwrite").format("parquet").saveAsTable("bm25_stats_tbl")
-    _BM25_STORE_BUILT.clear()
-    _BM25_STORE_BUILT[key] = True
+    return tuple(spark.table(t) for t in _BM25_TABLES)
 
 
 def _search_bm25_store_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:

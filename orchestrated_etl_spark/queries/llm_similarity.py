@@ -10,7 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from orchestrated_etl_spark.compat import default_parallelism
+from orchestrated_etl_spark.compat import shuffle_width
 from orchestrated_etl_spark.functions import similarity as SIM
 from orchestrated_etl_spark.registry import register
 
@@ -433,7 +433,7 @@ def _mapinarrow_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     emb = emb.repartition(
-        default_parallelism(spark), F.col("vec_id")
+        shuffle_width(spark), F.col("vec_id")
     )
     return emb.select("vec_id", "embedding").mapInArrow(
         batch_norms, "vec_id long, l2 double"
@@ -476,7 +476,7 @@ def _mrl_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = emb.filter(_query_pred())
     prefix = F.slice("embedding", 1, 16)
     c = emb.repartition(
-        default_parallelism(spark), F.col("vec_id")
+        shuffle_width(spark), F.col("vec_id")
     ).select(
         F.col("vec_id").alias("neighbor_id"),
         prefix.alias("_cpre"),

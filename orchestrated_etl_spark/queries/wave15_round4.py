@@ -42,7 +42,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from orchestrated_etl_spark.compat import default_parallelism
+from orchestrated_etl_spark.compat import shuffle_width
 from orchestrated_etl_spark.functions.graph import degrees
 from orchestrated_etl_spark.operators.relational import global_rank_two_phase
 from orchestrated_etl_spark.queries.graph_wave10 import _EDGE_CTE, cached_edges
@@ -2868,7 +2868,7 @@ def _pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "text"
     )
     words = docs.repartition(
-        default_parallelism(spark), "doc_id"
+        shuffle_width(spark), "doc_id"
     ).select(
         "doc_id",
         F.array_sort(

@@ -50,11 +50,7 @@ _DEFAULTS: dict[str, str] = {
 
 
 def local_cpus() -> int:
-    """Thread count for LOCAL mode, from $SPARK_GRAFT_CPUS (default 32).
-    Renamed from ``default_parallelism`` (round-14 review): that name
-    collided with ``compat.default_parallelism(spark)`` — the
-    cluster-aware shuffle width — and importing the wrong one silently
-    gave the 32-thread local default on a real cluster."""
+    """Thread count for LOCAL mode, from $SPARK_GRAFT_CPUS (default 32)."""
     try:
         return max(1, int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
     except ValueError:
@@ -75,6 +71,10 @@ def get_spark(
     ``spark.sql.shuffle.partitions`` defaults to the local thread count —
     on a 1000-executor cluster it should instead be ~2-3× total cores
     (AQE coalesces the excess at runtime, so erring high is safe).
+    ``shuffle_partitions`` also sizes the staged layouts: every explicit
+    ``repartition(n, key)`` and every ``staged_checkpoint`` uses
+    ``compat.shuffle_width``, which is this conf capped at the thread
+    count.
     """
     cpus = local_cpus()
     builder = SparkSession.builder.appName(app_name).master(

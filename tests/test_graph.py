@@ -6,6 +6,7 @@ map-side pair generation)."""
 from __future__ import annotations
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from orchestrated_etl_spark.functions.graph import (
@@ -208,30 +209,44 @@ def test_staged_checkpoint_preserves_partitioning_and_conf(spark):
     assert control.count("Exchange hashpartitioning") == 2, control
 
 
-def test_bfs_round_join_is_exchange_free(spark):
+@pytest.mark.parametrize("width", [3, 8, 200])
+def test_bfs_round_join_is_exchange_free(spark, tmp_path, width):
     """The bfs_distances round body must join the frontier against the
     staged edge layout with no exchange on either side (the r18
     zero-exchange-round contract; plans/r18/graph_bfs_frontier_round_
-    body_after.txt is the committed capture of the same shape)."""
-    from orchestrated_etl_spark.compat import (
-        default_parallelism,
-        staged_checkpoint,
-    )
-    from orchestrated_etl_spark.functions.graph import undirect
+    body_after.txt is the committed capture of the same shape), at
+    every shuffle width — 200 is a vanilla session's. The layout is the
+    one the product stages (cached_undirected_layout) from a tiny
+    lineitem: a path graph, order i buying parts i and i + 1."""
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, str(width))
+    try:
+        _assert_bfs_round_join_is_exchange_free(spark, tmp_path)
+    finally:
+        spark.conf.set(key, prev)
 
-    pairs = [(i, i + 1) for i in range(200)]
-    edges = _edges_df(spark, pairs)
-    # Width-aligned layout: the aggregate below always lands at
-    # spark.sql.shuffle.partitions, so stage the edge layout at the
-    # same width (the bench/driver sessions set shuffle.partitions ==
-    # default_parallelism, which is what bfs_distances' layout uses;
-    # this test session pins shuffle.partitions=8). A width MISMATCH
-    # would re-exchange only the frontier side — the edge side stays
-    # in place either way, which the src-key assertion pins.
-    width = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    u = staged_checkpoint(
-        undirect(edges).repartition(width, F.col("src"))
+
+def _assert_bfs_round_join_is_exchange_free(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from orchestrated_etl_spark.compat import staged_checkpoint
+    from orchestrated_etl_spark.queries.graph_wave10 import (
+        cached_undirected_layout,
     )
+
+    orders = [o for o in range(200) for _ in range(2)]
+    pq.write_table(
+        pa.table({
+            "l_orderkey": pa.array(orders, pa.int64()),
+            "l_partkey": pa.array(
+                [o + i for o in range(200) for i in range(2)], pa.int64()
+            ),
+        }),
+        tmp_path / "lineitem.parquet",
+    )
+    u = cached_undirected_layout(spark, str(tmp_path))
     # replicate the real loop: round 1 expands an RDD-backed seed, the
     # staged min-aggregate re-partitions by node, round 2's frontier is
     # a filter of that staged relation.
@@ -249,18 +264,12 @@ def test_bfs_round_join_is_exchange_free(spark):
         .groupBy("node").agg(F.min("dist").alias("dist"))
     )
     frontier = dist.filter(F.col("dist") == 1).select("node")
+    assert [r.node for r in frontier.collect()] == [1]
     plan = (
         frontier.hint("shuffle_hash").join(u, frontier["node"] == u["src"])
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "Exchange" not in plan, plan
     assert "ShuffledHashJoin" in plan, plan
-    # and independent of widths: the edge layout must NEVER be re-keyed
-    u32 = staged_checkpoint(
-        undirect(edges).repartition(default_parallelism(spark), F.col("src"))
-    )
-    plan32 = (
-        frontier.hint("shuffle_hash").join(u32, frontier["node"] == u32["src"])
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "Exchange hashpartitioning(src" not in plan32, plan32
+    # the edge layout must NEVER be re-keyed
+    assert "Exchange hashpartitioning(src" not in plan, plan

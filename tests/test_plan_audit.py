@@ -245,7 +245,7 @@ def test_source_rule_flags_bounded_key_repartition():
 
     # multi-line call with a parallelism expression + F.col form
     got = source_repartition_findings(
-        'df.repartition(\n    default_parallelism(spark), F.col("source")\n)',
+        'df.repartition(\n    shuffle_width(spark), F.col("source")\n)',
         "f.py",
     )
     assert len(got) == 1 and got[0][2] == ("source",)
@@ -254,7 +254,7 @@ def test_source_rule_flags_bounded_key_repartition():
     # star-args, range-partition on a date, docstring prose
     for src in [
         "df.repartition(64)",
-        'df.repartition(default_parallelism(spark), F.col("doc_id"))',
+        'df.repartition(shuffle_width(spark), F.col("doc_id"))',
         "df.repartition(par, F.col(id_col))",
         "df.repartitionByRange(num_range_partitions, *order_cols)",
         'df.repartitionByRange(8, "o_orderdate")',
@@ -1142,7 +1142,7 @@ def test_spark_connect_portability_exemptions_are_pinned():
     remaining ``sparkContext`` attribute sites (comments/docstrings
     don't count, so prose can't satisfy or trip the gate):
 
-    - compat.py: 2 — the guarded reads inside default_parallelism /
+    - compat.py: 2 — the guarded reads inside shuffle_width /
       application_id, each with a Connect-safe fallback;
     - session.py: 1 — setLogLevel in our own classic-only builder (a
       Connect user never calls it; the driver builds its own session).
@@ -1166,7 +1166,7 @@ def test_spark_connect_portability_exemptions_are_pinned():
 
 
 def test_compat_accessors_classic_and_connect_fallback(spark):
-    """compat.default_parallelism / application_id must (a) match the
+    """compat.shuffle_width / application_id must (a) match the
     classic sparkContext reads on a classic session, (b) degrade to the
     documented conf-based fallbacks ONLY on the literal Connect error
     type, and (c) propagate every classic-session failure — including a
@@ -1177,13 +1177,12 @@ def test_compat_accessors_classic_and_connect_fallback(spark):
     propagate)."""
     from pyspark.errors import PySparkAttributeError
 
-    from orchestrated_etl_spark.compat import (
-        application_id,
-        default_parallelism,
-    )
+    from orchestrated_etl_spark.compat import application_id, shuffle_width
 
-    assert default_parallelism(spark) == \
-        spark.sparkContext.defaultParallelism
+    assert shuffle_width(spark) == min(
+        int(spark.conf.get("spark.sql.shuffle.partitions")),
+        spark.sparkContext.defaultParallelism,
+    )
     assert application_id(spark) == spark.sparkContext.applicationId
 
     class _Conf:
@@ -1211,14 +1210,14 @@ def test_compat_accessors_classic_and_connect_fallback(spark):
 
     c = _ConnectLike({"spark.sql.shuffle.partitions": "17",
                       "spark.app.id": "app-42"})
-    assert default_parallelism(c) == 17
+    assert shuffle_width(c) == 17
     assert application_id(c) == "app-42"
     bare = _ConnectLike({})
-    assert default_parallelism(bare) == 200
+    assert shuffle_width(bare) == 200
     assert application_id(bare) == f"session-{id(bare)}"
 
     # Classic-session failures of EVERY other type must propagate, not
-    # silently switch the repartition width to the fallback:
+    # silently switch the repartition width or cache key to the fallback:
     class _BrokenClassic:
         conf = _Conf({"spark.sql.shuffle.partitions": "17"})
 
@@ -1228,7 +1227,7 @@ def test_compat_accessors_classic_and_connect_fallback(spark):
 
     broken = _BrokenClassic()
     with pytest.raises(RuntimeError, match="shut down"):
-        default_parallelism(broken)
+        shuffle_width(broken)
     with pytest.raises(RuntimeError, match="shut down"):
         application_id(broken)
 
@@ -1256,7 +1255,7 @@ def test_compat_accessors_classic_and_connect_fallback(spark):
 
     stopped = _StoppedClassic()
     with pytest.raises(AttributeError, match="NoneType"):
-        default_parallelism(stopped)
+        shuffle_width(stopped)
     with pytest.raises(AttributeError, match="NoneType"):
         application_id(stopped)
 

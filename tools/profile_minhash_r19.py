@@ -1,4 +1,4 @@
-"""Round-19: stage-level timing of the dedup_minhash_lsh pipeline.
+"""Stage-level timing of the dedup_minhash_lsh pipeline.
 
 Replays minhash_lsh_dedup's internal stages (sigs checkpoint, cands
 checkpoint, sets checkpoint, verify join) with separate timers so the
@@ -21,7 +21,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F  # noqa: E402
 
 from orchestrated_etl_spark.session import get_spark  # noqa: E402
-from orchestrated_etl_spark.compat import default_parallelism  # noqa: E402
+from orchestrated_etl_spark.compat import shuffle_width  # noqa: E402
 from orchestrated_etl_spark.functions import dedup as D  # noqa: E402
 
 
@@ -52,7 +52,7 @@ def main() -> None:
     }
     for _ in range(reps):
         t_all = time.perf_counter()
-        df = docs.repartition(default_parallelism(spark), F.col("doc_id"))
+        df = docs.repartition(shuffle_width(spark), F.col("doc_id"))
         t0 = time.perf_counter()
         sigs = D.minhash_signature_text(df, "doc_id", "text", 3, k)
         sigs = sigs.localCheckpoint(eager=True)
@@ -90,6 +90,11 @@ def main() -> None:
         out.count()
         stages["verify"].append(time.perf_counter() - t0)
         stages["total"].append(time.perf_counter() - t_all)
+        # Free this rep's checkpoint blocks so later reps do not run
+        # against a fuller block manager. DataFrame.unpersist() does not
+        # reach a local checkpoint; its LogicalRDD's RDD holds the blocks.
+        for staged in (sigs, cands, sets):
+            staged._jdf.queryExecution().logical().rdd().unpersist(True)
 
     import statistics
 

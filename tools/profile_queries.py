@@ -1,4 +1,4 @@
-"""Round-18 optimization harness: per-query measurement + plan capture.
+"""Per-query measurement + plan capture.
 
 For each named query (default: the bench HEADLINE list) this tool
 - builds the DataFrame and times the BUILD (driver-side plan
@@ -7,12 +7,15 @@ For each named query (default: the bench HEADLINE list) this tool
   every column of every row, no collect/count pruning) AND through the
   bench's own action (count/collect) so numbers stay comparable with
   BENCH_r*.json history,
-- counts Spark jobs per execution via the status tracker (job count ~
-  scheduling overhead: each eager localCheckpoint/broadcast is a job),
-- optionally writes `.explain("formatted")` to plans/r19/<q>_<tag>.txt.
+- counts Spark jobs per execution as the delta of the highest job id
+  the status tracker reports (job count ~ scheduling overhead: each
+  eager localCheckpoint/broadcast is a job) and prints the per-rep
+  counts,
+- optionally writes `.explain("formatted")` to DIR/<q>_<TAG>.txt.
 
 Usage:
-  python tools/profile_r19.py [--plans TAG] [--reps N] [--noop] [query ...]
+  python tools/profile_queries.py [--plans DIR] [--tag TAG] [--reps N]
+      [--noop] [query ...]
 """
 
 from __future__ import annotations
@@ -29,10 +32,15 @@ from orchestrated_etl_spark.session import get_spark  # noqa: E402
 
 def main() -> None:
     args = [a for a in sys.argv[1:]]
-    plans_tag = None
+    plans_dir = None
     if "--plans" in args:
         i = args.index("--plans")
-        plans_tag = args[i + 1]
+        plans_dir = args[i + 1]
+        del args[i : i + 2]
+    tag = "plan"
+    if "--tag" in args:
+        i = args.index("--tag")
+        tag = args[i + 1]
         del args[i : i + 2]
     reps = 3
     if "--reps" in args:
@@ -53,7 +61,7 @@ def main() -> None:
         if "=" in kv:
             k, v = kv.split("=", 1)
             extra[k.strip()] = v.strip()
-    spark = get_spark("profile_r19", extra_conf=extra or None)
+    spark = get_spark("profile_queries", extra_conf=extra or None)
     sc = spark.sparkContext
     qs = entrymod.queries()
     names = args or [n for n in bench.HEADLINE if n in qs]
@@ -70,22 +78,27 @@ def main() -> None:
     qs["sim_normalize_embeddings"](spark, sf_dir).count()
     qs["sim_vector_norms"](spark, sf_dir).count()
 
+    def last_job_id() -> int:
+        # Job ids only grow; the tracker keeps a bounded list
+        # (spark.ui.retainedJobs), so its length undercounts.
+        return max(sc.statusTracker().getJobIdsForGroup(None) or [-1])
+
     out = {}
     for name in names:
-        sc.setJobDescription(f"r19:{name}")
+        sc.setJobDescription(f"profile:{name}")
         # build cost (driver-side DataFrame construction)
         t0 = time.perf_counter()
         df = qs[name](spark, sf_dir)
         t_build = time.perf_counter() - t0
-        if plans_tag:
-            os.makedirs("plans/r19", exist_ok=True)
-            with open(f"plans/r19/{name}_{plans_tag}.txt", "w") as fh:
+        if plans_dir:
+            os.makedirs(plans_dir, exist_ok=True)
+            with open(f"{plans_dir}/{name}_{tag}.txt", "w") as fh:
                 fh.write(df._sc._jvm.PythonSQLUtils.explainString(
                     df._jdf.queryExecution(), "formatted"))
         samples = []
         jobs = []
         for _ in range(reps):
-            j0 = len(sc.statusTracker().getJobIdsForGroup(None) or [])
+            j0 = last_job_id()
             t0 = time.perf_counter()
             df = qs[name](spark, sf_dir)
             if use_noop:
@@ -93,8 +106,7 @@ def main() -> None:
             else:
                 df.collect() if name == "flagship" else df.count()
             samples.append(time.perf_counter() - t0)
-            j1 = len(sc.statusTracker().getJobIdsForGroup(None) or [])
-            jobs.append(j1 - j0)
+            jobs.append(last_job_id() - j0)
         samples.sort()
         med = samples[len(samples) // 2]
         out[name] = {
@@ -102,7 +114,7 @@ def main() -> None:
             "median_s": round(med, 3),
             "min_s": round(samples[0], 3),
             "max_s": round(samples[-1], 3),
-            "jobs": jobs[-1],
+            "jobs": jobs,
         }
         print(json.dumps({name: out[name]}), flush=True)
         sc.setJobDescription(None)
