@@ -142,6 +142,25 @@ def _env_telemetry() -> dict:
     }
 
 
+def warmup(spark, sf_dir: str, qs: dict) -> None:
+    """File-index listings + footer reads for every table, plus one real
+    query for codegen/JIT — so per-query timings measure the query, not
+    first-touch filesystem metadata."""
+    import glob
+
+    for p in glob.glob(f"{sf_dir}/*.parquet"):
+        if "events" in p:
+            continue  # TIMESTAMP(NANOS) needs the legacy conf set first
+        spark.read.parquet(p).count()
+    qs["datetime_daily_rollup"](spark, sf_dir).count()  # events path + conf
+    qs["q1_pricing_summary"](spark, sf_dir).collect()
+    # Start the Python-worker daemons + Arrow serializers once (first
+    # pandas-UDF query otherwise pays ~1 s of process fork/import), and
+    # JIT the interpreted higher-order-function expression paths.
+    qs["sim_normalize_embeddings"](spark, sf_dir).count()
+    qs["sim_vector_norms"](spark, sf_dir).count()
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
@@ -156,22 +175,7 @@ def main() -> None:
     # extension queries register later; include any bench-tagged ones
     names += [n for n in qs if n.startswith("bench_") and n not in names]
 
-    # Warmup: file-index listings + footer reads for every table, plus one
-    # real query for codegen/JIT — so per-query timings measure the query,
-    # not first-touch filesystem metadata.
-    import glob
-
-    for p in glob.glob(f"{sf_dir}/*.parquet"):
-        if "events" in p:
-            continue  # TIMESTAMP(NANOS) needs the legacy conf set first
-        spark.read.parquet(p).count()
-    qs["datetime_daily_rollup"](spark, sf_dir).count()  # events path + conf
-    qs["q1_pricing_summary"](spark, sf_dir).collect()
-    # Start the Python-worker daemons + Arrow serializers once (first
-    # pandas-UDF query otherwise pays ~1 s of process fork/import), and
-    # JIT the interpreted higher-order-function expression paths.
-    qs["sim_normalize_embeddings"](spark, sf_dir).count()
-    qs["sim_vector_norms"](spark, sf_dir).count()
+    warmup(spark, sf_dir, qs)
 
     # Two timed passes per query. COLD = the first execution, which pays
     # one-time whole-stage-codegen compilation (hundreds of ms for wide

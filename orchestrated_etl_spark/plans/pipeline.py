@@ -12,9 +12,9 @@ sequencing multiple sinks (O3's fan-out), input validation (T1), retries
 ``availableNow``, or a processing-time trigger).
 
 At 100 TB the fan-out pattern matters: a pipeline writing the same
-transformed frame to two sinks should compute it once — ``cache_before_
-fanout`` persists the pre-sink frame (MEMORY_AND_DISK) so the second sink
-reuses it instead of recomputing the whole lineage.
+transformed frame to two sinks should compute it once — a run with more
+than one pending sink persists the pre-sink frame (MEMORY_AND_DISK) so the
+second sink reuses it instead of recomputing the whole lineage.
 """
 
 from __future__ import annotations
@@ -56,7 +56,6 @@ class Pipeline:
     sinks: dict[str, Sink] = field(default_factory=dict)
     retries: int = 1
     retry_delay_s: float = 60.0
-    cache_before_fanout: bool = True
 
     def build(self, spark: SparkSession) -> DataFrame:
         """Compose the lazy plan (no execution)."""
@@ -74,7 +73,8 @@ class Pipeline:
             if stage.validate is not None:
                 stage.validate(df)
         todo = {k: s for k, s in self.sinks.items() if k not in done_sinks}
-        if len(todo) > 1 and self.cache_before_fanout:
+        fanout = len(todo) > 1
+        if fanout:
             df = df.persist()
         try:
             for name, sink in todo.items():
@@ -86,7 +86,7 @@ class Pipeline:
                 # next attempt; only the failed-and-after ones re-run.
                 done_sinks.add(name)
         finally:
-            if len(todo) > 1 and self.cache_before_fanout:
+            if fanout:
                 df.unpersist()
         return df
 

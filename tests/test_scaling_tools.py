@@ -1,31 +1,68 @@
-"""Smoke contracts for tools/scaling_common.py (round-10 consolidation
-of the measure_scaling_r* scaffolding) and the thin per-round drivers.
-
-The round files stay committed as reproducible method records; the
-machinery they share — steady-state timing, disjoint key-shift growth,
-alphabet-permutation content growth, temp-sf_dir staging — now lives in
-one module. These tests pin the properties the published SCALING.md
-curves depend on."""
+"""Contracts for the scaling driver (tools/measure_scaling.py): its
+curve table must name registered queries and real fixture columns, and
+one curve must run end to end; plus the properties of the shared growth
+machinery (tools/scaling_common.py) the published SCALING.md curves
+depend on."""
 
 from __future__ import annotations
 
-import py_compile
+import glob
+import os
 import sys
+import tempfile
 from pathlib import Path
+
+import pyarrow.parquet as pq
 
 REPO = Path(__file__).resolve().parents[1]
 sys.path.insert(0, str(REPO / "tools"))
 
+import measure_scaling as MS  # noqa: E402
 import scaling_common as SC  # noqa: E402
 
 
-def test_round_drivers_compile():
-    """Every historical measure_scaling_r* driver must still compile
-    against the consolidated module (the 'each historical tool still
-    runs' clause; full runs need 16g and minutes, so the per-round
-    METHODS are exercised via the shared builders below)."""
-    for p in sorted((REPO / "tools").glob("measure_scaling_r*.py")):
-        py_compile.compile(str(p), doraise=True)
+def test_curve_table_contract(spark, sf_dir):
+    """Every curve times a registered query, grows real tables and
+    columns, and gives columns of one key domain one shift."""
+    import __spark_entry__
+
+    qs = __spark_entry__.queries()
+    shared = 0
+    for name, curve in MS.CURVES.items():
+        assert (curve.query or name) in qs, name
+        assert curve.mults and curve.mults == tuple(sorted(curve.mults))
+        for table, g in curve.grow.items():
+            path = f"{sf_dir}/{table}.parquet"
+            assert os.path.exists(path), (name, table)
+            cols = set(pq.read_schema(path).names)
+            need = g.cols if isinstance(g, MS.Shift) else ("doc_id", "text")
+            assert set(need) <= cols, (name, table, need)
+        domains: dict[str, set[str]] = {}
+        for g in curve.grow.values():
+            for c in getattr(g, "cols", ()):
+                domains.setdefault(MS.KEY_DOMAIN.get(c, c), set()).add(c)
+        if any(len(cs) > 1 for cs in domains.values()):
+            shifts = MS.key_shifts(spark, sf_dir, curve)
+            for cs in domains.values():
+                assert len({shifts[c] for c in cs}) == 1, (name, cs)
+            shared += 1
+    # j1_star_join_revenue and dq_constraint_audit grow both orderkeys
+    assert shared >= 2
+
+
+def test_run_curve_smoke(spark, sf_dir):
+    """One curve at (1, 2) over the test fixtures: both grown tables double, the
+    query returns rows, and the staged temp dirs are removed."""
+    pattern = os.path.join(
+        tempfile.gettempdir(), "scale_j1_star_join_revenue_*"
+    )
+    before = set(glob.glob(pattern))
+    points = list(MS.run_curve(spark, sf_dir, "j1_star_join_revenue", (1, 2)))
+    assert [p["mult"] for p in points] == [1, 2]
+    for table in ("lineitem", "orders"):
+        assert points[1]["rows"][table] == 2 * points[0]["rows"][table] > 0
+    assert all(p["result_rows"] > 0 for p in points)
+    assert set(glob.glob(pattern)) == before
 
 
 def test_alphabet_permutations_distinct_and_bijective():

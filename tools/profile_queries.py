@@ -1,6 +1,7 @@
 """Per-query measurement + plan capture.
 
-For each named query (default: the bench HEADLINE list) this tool
+For each named query (default: the bench HEADLINE list; ``--all``: every
+registered query) this tool
 - builds the DataFrame and times the BUILD (driver-side plan
   construction — pure Python/Catalyst-analysis cost),
 - times N warm executions through the noop sink (guide §1.4: computes
@@ -13,13 +14,18 @@ For each named query (default: the bench HEADLINE list) this tool
   counts,
 - optionally writes `.explain("formatted")` to DIR/<q>_<TAG>.txt.
 
+A query that raises is recorded as ``{"error": ...}`` and the run moves
+on, so ``--all --reps 1`` is the whole-registry outlier sweep (streaming
+and sink-writing queries included). The last line lists the failures.
+
 Usage:
   python tools/profile_queries.py [--plans DIR] [--tag TAG] [--reps N]
-      [--noop] [query ...]
+      [--noop] [--all | query ...]
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
@@ -31,25 +37,14 @@ from orchestrated_etl_spark.session import get_spark  # noqa: E402
 
 
 def main() -> None:
-    args = [a for a in sys.argv[1:]]
-    plans_dir = None
-    if "--plans" in args:
-        i = args.index("--plans")
-        plans_dir = args[i + 1]
-        del args[i : i + 2]
-    tag = "plan"
-    if "--tag" in args:
-        i = args.index("--tag")
-        tag = args[i + 1]
-        del args[i : i + 2]
-    reps = 3
-    if "--reps" in args:
-        i = args.index("--reps")
-        reps = int(args[i + 1])
-        del args[i : i + 2]
-    use_noop = "--noop" in args
-    if use_noop:
-        args.remove("--noop")
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("--plans", metavar="DIR")
+    ap.add_argument("--tag", default="plan")
+    ap.add_argument("--reps", type=int, default=3)
+    ap.add_argument("--noop", action="store_true")
+    ap.add_argument("--all", action="store_true")
+    ap.add_argument("names", nargs="*", metavar="query")
+    args = ap.parse_args()
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     import bench
@@ -64,63 +59,65 @@ def main() -> None:
     spark = get_spark("profile_queries", extra_conf=extra or None)
     sc = spark.sparkContext
     qs = entrymod.queries()
-    names = args or [n for n in bench.HEADLINE if n in qs]
+    if args.all:
+        names = list(qs)
+    else:
+        names = args.names or [n for n in bench.HEADLINE if n in qs]
 
-    # same warmup as bench.py
-    import glob
-
-    for p in glob.glob(f"{sf_dir}/*.parquet"):
-        if "events" in p:
-            continue
-        spark.read.parquet(p).count()
-    qs["datetime_daily_rollup"](spark, sf_dir).count()
-    qs["q1_pricing_summary"](spark, sf_dir).collect()
-    qs["sim_normalize_embeddings"](spark, sf_dir).count()
-    qs["sim_vector_norms"](spark, sf_dir).count()
+    bench.warmup(spark, sf_dir, qs)
 
     def last_job_id() -> int:
         # Job ids only grow; the tracker keeps a bounded list
         # (spark.ui.retainedJobs), so its length undercounts.
         return max(sc.statusTracker().getJobIdsForGroup(None) or [-1])
 
-    out = {}
-    for name in names:
-        sc.setJobDescription(f"profile:{name}")
+    def profile(name: str) -> dict:
         # build cost (driver-side DataFrame construction)
         t0 = time.perf_counter()
         df = qs[name](spark, sf_dir)
         t_build = time.perf_counter() - t0
-        if plans_dir:
-            os.makedirs(plans_dir, exist_ok=True)
-            with open(f"{plans_dir}/{name}_{tag}.txt", "w") as fh:
+        if args.plans:
+            os.makedirs(args.plans, exist_ok=True)
+            with open(f"{args.plans}/{name}_{args.tag}.txt", "w") as fh:
                 fh.write(df._sc._jvm.PythonSQLUtils.explainString(
                     df._jdf.queryExecution(), "formatted"))
         samples = []
         jobs = []
-        for _ in range(reps):
+        for _ in range(args.reps):
             j0 = last_job_id()
             t0 = time.perf_counter()
             df = qs[name](spark, sf_dir)
-            if use_noop:
+            if args.noop:
                 df.write.format("noop").mode("overwrite").save()
             else:
                 df.collect() if name == "flagship" else df.count()
             samples.append(time.perf_counter() - t0)
             jobs.append(last_job_id() - j0)
         samples.sort()
-        med = samples[len(samples) // 2]
-        out[name] = {
+        return {
             "build_s": round(t_build, 3),
-            "median_s": round(med, 3),
+            "median_s": round(samples[len(samples) // 2], 3),
             "min_s": round(samples[0], 3),
             "max_s": round(samples[-1], 3),
             "jobs": jobs,
         }
+
+    out = {}
+    for name in names:
+        sc.setJobDescription(f"profile:{name}")
+        try:
+            out[name] = profile(name)
+        except Exception as ex:  # noqa: BLE001 — record and move on
+            out[name] = {"error": str(ex)[:200]}
         print(json.dumps({name: out[name]}), flush=True)
         sc.setJobDescription(None)
 
-    total = round(sum(v["median_s"] for v in out.values()), 3)
-    print(json.dumps({"total_median": total, "n": len(out)}))
+    timed = [v["median_s"] for v in out.values() if "median_s" in v]
+    print(json.dumps({
+        "total_median": round(sum(timed), 3),
+        "n": len(out),
+        "errors": [k for k, v in out.items() if "error" in v],
+    }))
 
 
 if __name__ == "__main__":

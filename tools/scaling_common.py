@@ -1,11 +1,7 @@
-"""Shared scaffolding for the measure_scaling_r* drivers (round-10
-consolidation — the r9 verdict's item 5: seven near-clone round files
-accreted ~2.4k LoC of duplicated staging/growth/timing boilerplate).
-
-The per-round files stay committed as thin, reproducible drivers — the
-measurement *methods* (which keys shift, which multipliers, which cores
-run) remain round-pinned there, exactly as published in SCALING.md. What
-lives here is only the method-neutral machinery every round shares:
+"""Growth and timing machinery for ``tools/measure_scaling.py``, the one
+scaling driver: which query each curve times, which tables it grows and
+the published multipliers live in that driver's curve table; this module
+holds only the method-neutral parts:
 
 - ``steady``: the SCALING.md steady-state protocol — each reported
   timing is the SECOND consecutive run; the first absorbs staging,
@@ -14,19 +10,19 @@ lives here is only the method-neutral machinery every round shares:
   of a frame with the listed key columns shifted by ``i * (max(key)+1)``
   per copy — disjoint id spaces, so per-entity structure is constant and
   the measured growth term is pure data volume. Pass explicit ``shifts``
-  to reproduce a historical round's exact (pre-consolidation) choice.
+  when several columns share one key domain.
 - disjoint growth by CONTENT PERMUTATION (``rot26``/``dihedral52`` +
   ``grow_permuted_docs``): text copies under distinct alphabet
   permutations, so token/chunk/shingle domains genuinely grow. Plain
   rotations give 26 distinct transforms; the dihedral family (reflection
-  composed with rotation) gives 52 — required past 26 copies (r9 CDC).
+  composed with rotation) gives 52 — required past 26 copies.
 - temp-sf_dir staging (``stage_parquet`` + ``staged_tmpdir``): grown
   inputs are written to a temporary sf_dir so operators run through
   their normal ``(spark, sf_dir)`` contract, 32 files to match the
   local[32] layout.
 
-Drivers need ``SPARK_GRAFT_DRIVER_MEM=16g`` past ~mult 5 (the default
-1 g driver heap dies during checkpoint-heavy staging).
+Curves need ``SPARK_GRAFT_DRIVER_MEM=16g`` past ~mult 5 over sf0.1 (the
+default 1 g driver heap dies during checkpoint-heavy staging).
 """
 
 from __future__ import annotations
@@ -72,8 +68,8 @@ def grow_shifted(
 ) -> DataFrame:
     """Union ``mult`` copies of ``df`` with each key in ``cols`` shifted
     by ``i * shift`` per copy i — disjoint id spaces, constant per-entity
-    structure. Default shift is ``max(col)+1``; pass ``shifts`` to pin a
-    historical round's exact choice."""
+    structure. Default shift is ``max(col)+1``; pass ``shifts`` when key
+    columns of several tables must share one shift."""
     if shifts is None:
         shifts = {c: max_shift(df, c) for c in cols}
     parts = [df]
@@ -86,8 +82,7 @@ def grow_shifted(
 
 
 def rot26(i: int) -> str:
-    """Alphabet rotation i (26 distinct transforms — the r3/r4b/r6
-    content-growth family)."""
+    """Alphabet rotation i (26 distinct transforms)."""
     k = i % 26
     return _LOWER[k:] + _LOWER[:k]
 
@@ -95,7 +90,7 @@ def rot26(i: int) -> str:
 def dihedral52(i: int) -> str:
     """Dihedral alphabet permutation i: rotations for i<26, reflection
     (z<->a) composed with rotation for 26<=i<52 — 52 distinct transforms,
-    enough for 50x content growth (r9 CDC)."""
+    enough for 50x content growth."""
     base = _LOWER[::-1] if i >= 26 else _LOWER
     k = i % 26
     return base[k:] + base[:k]
@@ -140,26 +135,3 @@ def staged_tmpdir(prefix: str) -> Iterator[str]:
         yield tmp
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
-
-
-def write_scaled_lineitem_disjoint(
-    spark, sf_dir: str, mult: int, out_dir: str
-) -> int:
-    """lineitem grown with BOTH l_orderkey and l_partkey shifted — each
-    copy contributes a DISJOINT co-purchase component (the r6/r8/r9
-    graph-growth method). Returns the grown row count."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    n = li.count()
-    grown = grow_shifted(li, mult, ["l_orderkey", "l_partkey"])
-    stage_parquet(grown, f"{out_dir}/lineitem.parquet")
-    return n * mult
-
-
-def scaled_docs_idshift(spark, sf_dir: str, mult: int) -> DataFrame:
-    """documents (doc_id, text) grown by doc-id-shifted VERBATIM copies —
-    each copy is a disjoint near-dup cluster family (the r8/r9 minhash /
-    BM25 / incremental-dedup growth method)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text"
-    )
-    return grow_shifted(docs, mult, ["doc_id"])
