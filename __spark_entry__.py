@@ -20,7 +20,7 @@ from orchestrated_etl_spark import registry
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
-    from orchestrated_etl_spark.operators.enrich import flagship
+    from orchestrated_etl_spark.queries.reference import flagship
 
     return flagship(spark, "/root/testdata/sf0.001")
 

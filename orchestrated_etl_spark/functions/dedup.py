@@ -240,6 +240,66 @@ def minhash_hash_constants(k: int) -> list[tuple[int, int]]:
     return [(_MINHASH_A[i], _MINHASH_B[i]) for i in range(k)]
 
 
+# Default MinHash-LSH setting of the registered dedup queries (k=8,
+# b=4, r=2, Jaccard >= 0.9) and its DuckDB spelling for their oracles.
+MINHASH_K, MINHASH_BANDS, MINHASH_ROWS = 8, 4, 2
+MINHASH_THRESHOLD = 0.9
+
+
+def minhash_oracle_ctes() -> str:
+    """The MinHash pipeline as CTE bodies for the DuckDB oracles of the
+    queries that run MinHash at the default setting (the components
+    oracle prepends WITH RECURSIVE). Mirrors this module exactly:
+    h = 60-bit md5 prefix, k affine permutations over P, '|'-joined
+    band buckets."""
+    ab = minhash_hash_constants(MINHASH_K)
+    sig_cols = ",\n               ".join(
+        f"min(({a} * h + {b}) % {MINHASH_P}) AS sig{i}"
+        for i, (a, b) in enumerate(ab)
+    )
+    band_selects = "\n        UNION ALL ".join(
+        f"SELECT id, {b} AS band, concat(CAST(sig{b * MINHASH_ROWS} AS VARCHAR), '|', "
+        f"CAST(sig{b * MINHASH_ROWS + 1} AS VARCHAR)) AS bucket FROM sigs"
+        for b in range(MINHASH_BANDS)
+    )
+    return f"""
+    tok AS (
+        SELECT doc_id AS id,
+               unnest(list_distinct([array_to_string(ts[i:i+2], ' ')
+                                     for i in range(1, greatest(len(ts) - 2, 1) + 1)])) AS w,
+               len(list_distinct([array_to_string(ts[i:i+2], ' ')
+                                  for i in range(1, greatest(len(ts) - 2, 1) + 1)])) AS n
+        FROM (SELECT doc_id, string_split(text, ' ') AS ts FROM documents)
+    ),
+    tokh AS (
+        SELECT id, w, n,
+               CAST(concat('0x', substr(md5(w), 1, 15)) AS BIGINT)
+                   % {MINHASH_P} AS h
+        FROM tok
+    ),
+    sigs AS (
+        SELECT id,
+               {sig_cols}
+        FROM tokh GROUP BY id
+    ),
+    buckets AS (
+        {band_selects}
+    ),
+    cands AS (
+        SELECT DISTINCT a.id AS id_a, b.id AS id_b
+        FROM buckets a
+        JOIN buckets b ON a.band = b.band AND a.bucket = b.bucket AND a.id < b.id
+    ),
+    shared AS (
+        SELECT id_a, id_b, ea.n AS n_a, eb.n AS n_b, count(*) AS shared
+        FROM cands
+        JOIN tok ea ON id_a = ea.id
+        JOIN tok eb ON id_b = eb.id AND ea.w = eb.w
+        GROUP BY 1, 2, 3, 4
+    )
+    """
+
+
 def _minhash_agg(ex: DataFrame, k: int) -> DataFrame:
     """(_id, _elem) rows → k-column signature: each element is md5'd ONCE
     (the expensive part), reduced to a 60-bit integer h, and the k

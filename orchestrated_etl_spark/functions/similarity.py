@@ -28,6 +28,14 @@ from pyspark.sql import functions as F
 from orchestrated_etl_spark.compat import shuffle_width
 from orchestrated_etl_spark.functions.dedup import cosine, dot, vec_norm
 
+# DuckDB spelling of the exact cosine, for the oracles of the
+# similarity and embedding-dedup queries.
+COS_SQL = (
+    "list_dot_product(CAST({a} AS DOUBLE[]), CAST({b} AS DOUBLE[]))"
+    " / (sqrt(list_dot_product(CAST({a} AS DOUBLE[]), CAST({a} AS DOUBLE[])))"
+    " * sqrt(list_dot_product(CAST({b} AS DOUBLE[]), CAST({b} AS DOUBLE[]))))"
+)
+
 
 def brute_force_topk(
     queries: DataFrame,

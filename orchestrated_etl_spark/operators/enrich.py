@@ -1,4 +1,4 @@
-"""Enrich-stage aggregates (SURVEY §2.3, A1-A5) and the flagship pipeline.
+"""Enrich-stage aggregates (SURVEY §2.3, A1-A5).
 
 The reference computes five per-Author aggregates as THREE separate pandas
 groupbys reassembled by three joins (/root/reference/dags/dag.py:167-182 —
@@ -50,88 +50,4 @@ def enrich_metrics(
         csum.alias("Total_rating_count"),
         wsum.alias("Sum_rating_count_rating"),
         F.count(F.lit(1)).alias("Book_count"),
-    )
-
-
-def flagship(spark, sf_dir: str) -> DataFrame:
-    """The whole reference pipeline transposed onto the star schema as ONE
-    lazy plan (SURVEY §7 step 1): scan lineitem → completeness filter (S3)
-    → standardise casts (T3) → the A1-A5 aggregate family per nation
-    (lineitem⋈orders⋈customer⋈nation, J1-J3) — weighted avg of l_discount
-    weighted by l_quantity plays Average_rating; avg(l_extendedprice) plays
-    Average_price.
-
-    Scale posture (doc matches code — r17 review): only NATION carries a
-    forced broadcast hint (25 rows, construction-fixed —
-    schemas.BROADCAST_TABLES). The customer and orders projections reach
-    the broadcast path ONLY while their actual size is under
-    autoBroadcastJoinThreshold (true at bench scale; threshold/AQE
-    decide — no hint, per the forced-broadcast rule); past it,
-    lineitem⋈orders and ⋈customer degrade gracefully to key-partitioned
-    shuffle joins. The single aggregate shuffles its partial rows once
-    on the final small key (25 nations). Catalyst prunes lineitem's
-    scan to 5 of 11 columns and pushes the null filters into parquet.
-    """
-    lineitem = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    customer = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
-
-    # SCALED-INTEGER (cents) accumulation: every column is a ≤2-decimal
-    # POSITIVE value, so floor(x·100 + 0.5) recovers the exact integer
-    # hundredths and the sums/products run on plain longs — exact in any
-    # order like DECIMAL, but on the codegen long fast path (measured
-    # ~25% faster than decimal(14,2) sums, whose 24-digit result exceeds
-    # Spark's long-backed decimal and falls to BigDecimal). Overflow
-    # bound: 2^63 hundredths ≈ $9e16 of summed value — far past any real
-    # corpus; use the DECIMAL form (see other queries) beyond that or for
-    # negative-able columns (floor(+0.5) is round-half-up only for x>0).
-    cents = lambda col, scale=100: F.floor(col * scale + F.lit(0.5)).cast(  # noqa: E731
-        "long"
-    )
-    cleaned = (
-        lineitem.na.drop(
-            "any", subset=["l_quantity", "l_extendedprice", "l_discount"]
-        )
-        .select(
-            "l_orderkey",
-            cents(F.col("l_quantity")).alias("qty_c"),
-            cents(F.col("l_extendedprice")).alias("price_c"),
-            cents(F.col("l_discount")).alias("disc_c"),
-        )
-    )
-    wsum = F.sum(F.col("disc_c") * F.col("qty_c")) / 10000.0
-    qsum = F.sum("qty_c") / 100.0
-    psum = F.sum("price_c") / 100.0
-    return (
-        cleaned.join(
-            orders.select("o_orderkey", "o_custkey"),
-            cleaned.l_orderkey == F.col("o_orderkey"),
-            "inner",
-        )
-        .join(
-            # No broadcast HINT on customer (round-14 review): customer
-            # is 150k·SF rows — a 2-column projection broadcasts fine at
-            # bench scale, but an UNCONDITIONAL hint overrides
-            # autoBroadcastJoinThreshold and would OOM at the 100 TB SF
-            # this plan claims to serve. Let the threshold + AQE decide:
-            # below 64 MB Catalyst still picks broadcast (same local
-            # plan), above it the join degrades gracefully to shuffle.
-            customer.select("c_custkey", "c_nationkey"),
-            F.col("o_custkey") == F.col("c_custkey"),
-            "inner",
-        )
-        .join(
-            F.broadcast(nation.select("n_nationkey", "n_name")),
-            F.col("c_nationkey") == F.col("n_nationkey"),
-            "inner",
-        )
-        .groupBy("n_name")
-        .agg(
-            F.try_divide(wsum, qsum).alias("avg_weighted_discount"),
-            F.try_divide(psum, F.count(F.lit(1))).alias("avg_price"),
-            qsum.alias("total_qty"),
-            wsum.alias("sum_disc_qty"),
-            F.count(F.lit(1)).alias("item_count"),
-        )
     )

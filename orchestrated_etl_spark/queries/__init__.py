@@ -1,4 +1,6 @@
-"""Query modules. Importing each module registers its queries/oracles."""
+"""Query modules, one per query family. Importing each module registers
+its queries/oracles; the registry orders them by REGISTRATION_ORDER.txt,
+so import order does not matter."""
 
 from __future__ import annotations
 
@@ -10,30 +12,19 @@ def load() -> None:
     if _loaded:
         return
     _loaded = True
-    # Import order == checklist order (SURVEY §2 → gap list → extensions).
     from orchestrated_etl_spark.queries import (  # noqa: F401
-        reference_surface,
+        aggregates,
+        dedup,
+        events,
+        graph,
+        io,
+        multimodal,
+        reference,
         relational,
-        sql_subqueries,
-        sql_tpch_more,
-        sql_tpch_wave3,
-        llm_text,
-        llm_dedup,
-        llm_similarity,
-        llm_multimodal,
-        streaming_queries,
-        scale_ops,
-        training_pipeline,
-        surface_wave4,
-        analytics_wave5,
-        sql_surface_wave6,
-        sql_surface_wave7,
-        sql_tpch_wave8,
-        llm_search_quality,
-        surface_wave9,
-        graph_wave10,
-        ops_wave11,
-        sql_surface_wave12,
-        wave13_round4,
-        wave15_round4,
+        similarity,
+        sql,
+        streaming,
+        text,
+        tpch,
+        training,
     )

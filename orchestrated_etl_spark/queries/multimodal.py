@@ -1,7 +1,8 @@
-"""Multimodal-column queries (north-star extension): opaque binary payloads
-with typed metadata, JVM-side metadata extraction, and the Arrow-batched
-mapInPandas decode path (deterministic fake decoder — see
-functions/multimodal.py; the oracle reproduces it from md5 nibbles)."""
+"""Multimodal-column queries (north-star extension): opaque binary
+payloads with typed metadata, JVM-side metadata extraction, and the
+Arrow-batched mapInPandas decode path (deterministic fake decoder — see
+functions/multimodal.py; the oracle reproduces it from md5 nibbles).
+"""
 
 from __future__ import annotations
 
@@ -10,6 +11,8 @@ from pyspark.sql import functions as F
 
 from orchestrated_etl_spark.functions import multimodal as M
 from orchestrated_etl_spark.registry import register
+from orchestrated_etl_spark.sources.catalog import load_table
+
 
 # ---------------------------------------------------------------------------
 # binary payload + JVM-side metadata (no Python anywhere)
@@ -17,7 +20,7 @@ from orchestrated_etl_spark.registry import register
 
 
 def _binary_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load_table(spark, sf_dir, "documents")
     return M.binary_metadata(docs, "doc_id", M.to_binary("text"))
 
 
@@ -39,7 +42,7 @@ register(
 
 
 def _decoded(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load_table(spark, sf_dir, "documents")
     payload = docs.select("doc_id", M.to_binary("text").alias("media"))
     return M.decoded_metadata(payload, "doc_id", "media")
 
@@ -70,7 +73,7 @@ register(
 
 
 def _frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load_table(spark, sf_dir, "documents")
     payload = docs.select("doc_id", M.to_binary("text").alias("media"))
     decoded = M.decoded_metadata(payload, "doc_id", "media")
     return M.frame_sample(decoded, "doc_id", "n_frames", 4)
@@ -96,7 +99,7 @@ register(
 
 
 def _resized(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load_table(spark, sf_dir, "documents")
     payload = docs.select("doc_id", M.to_binary("text").alias("media"))
     return M.resized_metadata(payload, "doc_id", "media", target=256)
 
@@ -137,7 +140,7 @@ def _fake_embed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     composition with the model stubbed and every other part real."""
     from orchestrated_etl_spark.functions import similarity as SIM
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load_table(spark, sf_dir, "documents")
     payload = docs.select("doc_id", M.to_binary("text").alias("media"))
     emb = M.fake_embeddings(payload, "doc_id", "media", dim=8)
     queries = emb.filter(F.col("doc_id") % 50 == 0)
@@ -195,7 +198,7 @@ def _scene_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
     → per-video rollup. One shuffle on doc_id shared by the window and
     the aggregate; per-frame features are scan-stage expressions, so a
     100 TB frame table never re-shuffles for feature computation."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load_table(spark, sf_dir, "documents")
     payload = docs.select("doc_id", M.to_binary("text").alias("media"))
     decoded = M.decoded_metadata(payload, "doc_id", "media")
     frames = decoded.select(
@@ -296,7 +299,7 @@ def _vad_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     is exact integers. At 100 TB of audio the frame table never
     re-shuffles for feature computation, and transcription cost falls
     from total-duration to voiced-duration."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load_table(spark, sf_dir, "documents")
     payload = docs.select("doc_id", M.to_binary("text").alias("media"))
     decoded = M.decoded_metadata(payload, "doc_id", "media")
     frames = decoded.select(

@@ -13,12 +13,99 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from orchestrated_etl_spark.operators import standardise as S
-from orchestrated_etl_spark.operators.enrich import enrich_metrics, flagship
+from orchestrated_etl_spark.operators.enrich import enrich_metrics
 from orchestrated_etl_spark.registry import register
+from orchestrated_etl_spark.sources.catalog import load_table
+
 
 # ---------------------------------------------------------------------------
 # flagship — the whole reference pipeline as one plan (SURVEY §7 step 1)
 # ---------------------------------------------------------------------------
+
+
+def flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The whole reference pipeline transposed onto the star schema as ONE
+    lazy plan (SURVEY §7 step 1): scan lineitem → completeness filter (S3)
+    → standardise casts (T3) → the A1-A5 aggregate family per nation
+    (lineitem⋈orders⋈customer⋈nation, J1-J3) — weighted avg of l_discount
+    weighted by l_quantity plays Average_rating; avg(l_extendedprice) plays
+    Average_price.
+
+    Scale posture (doc matches code — r17 review): only NATION carries a
+    forced broadcast hint (25 rows, construction-fixed —
+    schemas.BROADCAST_TABLES). The customer and orders projections reach
+    the broadcast path ONLY while their actual size is under
+    autoBroadcastJoinThreshold (true at bench scale; threshold/AQE
+    decide — no hint, per the forced-broadcast rule); past it,
+    lineitem⋈orders and ⋈customer degrade gracefully to key-partitioned
+    shuffle joins. The single aggregate shuffles its partial rows once
+    on the final small key (25 nations). Catalyst prunes lineitem's
+    scan to 5 of 11 columns and pushes the null filters into parquet.
+    """
+    lineitem = load_table(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders")
+    customer = load_table(spark, sf_dir, "customer")
+    nation = load_table(spark, sf_dir, "nation")
+
+    # SCALED-INTEGER (cents) accumulation: every column is a ≤2-decimal
+    # POSITIVE value, so floor(x·100 + 0.5) recovers the exact integer
+    # hundredths and the sums/products run on plain longs — exact in any
+    # order like DECIMAL, but on the codegen long fast path (measured
+    # ~25% faster than decimal(14,2) sums, whose 24-digit result exceeds
+    # Spark's long-backed decimal and falls to BigDecimal). Overflow
+    # bound: 2^63 hundredths ≈ $9e16 of summed value — far past any real
+    # corpus; use the DECIMAL form (see other queries) beyond that or for
+    # negative-able columns (floor(+0.5) is round-half-up only for x>0).
+    cents = lambda col, scale=100: F.floor(col * scale + F.lit(0.5)).cast(  # noqa: E731
+        "long"
+    )
+    cleaned = (
+        lineitem.na.drop(
+            "any", subset=["l_quantity", "l_extendedprice", "l_discount"]
+        )
+        .select(
+            "l_orderkey",
+            cents(F.col("l_quantity")).alias("qty_c"),
+            cents(F.col("l_extendedprice")).alias("price_c"),
+            cents(F.col("l_discount")).alias("disc_c"),
+        )
+    )
+    wsum = F.sum(F.col("disc_c") * F.col("qty_c")) / 10000.0
+    qsum = F.sum("qty_c") / 100.0
+    psum = F.sum("price_c") / 100.0
+    return (
+        cleaned.join(
+            orders.select("o_orderkey", "o_custkey"),
+            cleaned.l_orderkey == F.col("o_orderkey"),
+            "inner",
+        )
+        .join(
+            # No broadcast HINT on customer (round-14 review): customer
+            # is 150k·SF rows — a 2-column projection broadcasts fine at
+            # bench scale, but an UNCONDITIONAL hint overrides
+            # autoBroadcastJoinThreshold and would OOM at the 100 TB SF
+            # this plan claims to serve. Let the threshold + AQE decide:
+            # below 64 MB Catalyst still picks broadcast (same local
+            # plan), above it the join degrades gracefully to shuffle.
+            customer.select("c_custkey", "c_nationkey"),
+            F.col("o_custkey") == F.col("c_custkey"),
+            "inner",
+        )
+        .join(
+            F.broadcast(nation.select("n_nationkey", "n_name")),
+            F.col("c_nationkey") == F.col("n_nationkey"),
+            "inner",
+        )
+        .groupBy("n_name")
+        .agg(
+            F.try_divide(wsum, qsum).alias("avg_weighted_discount"),
+            F.try_divide(psum, F.count(F.lit(1))).alias("avg_price"),
+            qsum.alias("total_qty"),
+            wsum.alias("sum_disc_qty"),
+            F.count(F.lit(1)).alias("item_count"),
+        )
+    )
+
 
 register(
     "flagship",
@@ -153,7 +240,7 @@ register(
 
 
 def _s3_completeness(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = load_table(spark, sf_dir, "lineitem")
     return S.drop_incomplete(
         li.select("l_orderkey", "l_linenumber", "l_quantity", "l_discount"),
         ["l_quantity", "l_discount"],
@@ -177,7 +264,7 @@ register(
 
 
 def _s5_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = load_table(spark, sf_dir, "orders")
     return (
         orders.select("o_orderkey", "o_custkey", "o_totalprice")
         .orderBy("o_orderkey")
@@ -200,7 +287,7 @@ register(
 
 
 def _t2_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load_table(spark, sf_dir, "documents")
     return S.dedup_by_key_deterministic(
         docs.select("doc_id", "text", "lang"), ["text"], "doc_id"
     ).select("doc_id", "text", "lang")
@@ -221,7 +308,7 @@ register(
 
 
 def _t3_casts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = load_table(spark, sf_dir, "lineitem")
     return li.select(
         "l_orderkey",
         "l_linenumber",
@@ -247,7 +334,7 @@ register(
 
 
 def _t4_regex(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = load_table(spark, sf_dir, "orders")
     return orders.select(
         "o_orderkey",
         S.extract_number("o_orderpriority", r"(\d)", "int").alias("priority_num"),
@@ -273,7 +360,7 @@ register(
 
 
 def _t5_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = load_table(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",
         S.strip_separators_to_long(F.format_number(F.col("n_chars") * 1000, 0)).alias(
@@ -298,7 +385,7 @@ register(
 
 
 def _t6_project(spark: SparkSession, sf_dir: str) -> DataFrame:
-    part = spark.read.parquet(f"{sf_dir}/part.parquet")
+    part = load_table(spark, sf_dir, "part")
     return S.project_drop(part, "p_name", "p_type", "p_retailprice")
 
 
@@ -315,9 +402,9 @@ register(
 
 
 def _a_family(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    customer = spark.read.parquet(f"{sf_dir}/customer.parquet")
+    li = load_table(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders")
+    customer = load_table(spark, sf_dir, "customer")
     joined = (
         li.select("l_orderkey", "l_quantity", "l_discount", "l_extendedprice")
         .join(orders.select("o_orderkey", "o_custkey"), li.l_orderkey == F.col("o_orderkey"))
@@ -391,13 +478,13 @@ def _c1p(col):
 
 
 def _q1_pricing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = load_table(spark, sf_dir, "lineitem")
     return (
         li.filter(F.col("l_shipdate") <= F.lit("1998-09-02"))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
             # SCALED-INTEGER (cents) accumulation — exact like DECIMAL but
-            # on the codegen long fast path (see operators/enrich.py for
+            # on the codegen long fast path (see flagship above for
             # the full rationale and overflow bound). The disc/charge
             # products accumulate at scale 4/6 (hundredths × hundredths).
             (F.sum(_c("l_quantity")) / 100.0).alias("sum_qty"),
@@ -466,11 +553,11 @@ def _j1_star_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     at bench scale and degrades to a key-partitioned shuffle join past
     it); lineitem⋈orders is the one big-big join, and AQE converts even
     that to broadcast at small sf."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    customer = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
-    region = spark.read.parquet(f"{sf_dir}/region.parquet")
+    li = load_table(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders")
+    customer = load_table(spark, sf_dir, "customer")
+    nation = load_table(spark, sf_dir, "nation")
+    region = load_table(spark, sf_dir, "region")
     return (
         li.select("l_orderkey", "l_extendedprice", "l_discount")
         .join(orders.select("o_orderkey", "o_custkey"), li.l_orderkey == F.col("o_orderkey"))
@@ -521,8 +608,8 @@ register(
 def _j_left(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left outer join: every customer with order count + total spend
     (0 / NULL for customers with no orders — count(col) skips NULLs)."""
-    customer = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    customer = load_table(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders")
     return (
         customer.select("c_custkey", "c_mktsegment")
         .join(
@@ -556,8 +643,8 @@ register(
 
 def _j_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left-semi join (EXISTS): customers having ≥1 urgent order."""
-    customer = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    customer = load_table(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders")
     urgent = orders.filter(F.col("o_orderpriority") == "1-URGENT").select("o_custkey")
     return customer.select("c_custkey", "c_name").join(
         urgent, customer.c_custkey == urgent.o_custkey, "left_semi"
@@ -577,8 +664,8 @@ register(
 
 def _j_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left-anti join (NOT EXISTS): orders with no lineitems."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    orders = load_table(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem")
     return orders.select("o_orderkey", "o_orderstatus").join(
         li.select("l_orderkey"), orders.o_orderkey == F.col("l_orderkey"), "left_anti"
     )

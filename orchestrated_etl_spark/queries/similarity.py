@@ -1,24 +1,24 @@
-"""Similarity-search queries over `embeddings` (north-star extension):
-brute-force cosine top-k baseline and the IVF-bucketed scale path, plus
+"""Similarity search over ``embeddings``: brute-force cosine top-k, the
+IVF and SQ8 scale paths, random-hyperplane LSH, centroid matrices and
 vector-norm profiling. Cosines are computed in double on both engines
-(Spark: cast-before-multiply aggregate; DuckDB: DOUBLE[] list_dot_product)
-and ranked on the rounded score with id tie-breaks, so rankings are
-engine-independent."""
+(Spark: cast-before-multiply aggregate; DuckDB: DOUBLE[]
+list_dot_product) and ranked on the rounded score with id tie-breaks, so
+rankings are engine-independent.
+"""
 
 from __future__ import annotations
+
+import hashlib
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from orchestrated_etl_spark.compat import shuffle_width
 from orchestrated_etl_spark.functions import similarity as SIM
+from orchestrated_etl_spark.functions.dedup import cosine
 from orchestrated_etl_spark.registry import register
+from orchestrated_etl_spark.sources.catalog import load_table
 
-_COS_SQL = (
-    "list_dot_product(CAST({a} AS DOUBLE[]), CAST({b} AS DOUBLE[]))"
-    " / (sqrt(list_dot_product(CAST({a} AS DOUBLE[]), CAST({a} AS DOUBLE[])))"
-    " * sqrt(list_dot_product(CAST({b} AS DOUBLE[]), CAST({b} AS DOUBLE[]))))"
-)
 
 # ---------------------------------------------------------------------------
 # brute-force cosine top-k
@@ -37,7 +37,7 @@ def _query_pred():
 
 
 def _bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(_query_pred())
     return SIM.brute_force_topk(queries, emb, "vec_id", "embedding", 5)
 
@@ -48,7 +48,7 @@ register(
     f"""
     WITH scored AS (
         SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-               round({_COS_SQL.format(a='q.embedding', b='c.embedding')}, 6) AS cosine
+               round({SIM.COS_SQL.format(a='q.embedding', b='c.embedding')}, 6) AS cosine
         FROM embeddings q
         JOIN embeddings c ON q.vec_id != c.vec_id
         WHERE q.vec_id % 25 = 0 AND q.vec_id < 500
@@ -69,7 +69,7 @@ register(
 
 
 def _ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = load_table(spark, sf_dir, "embeddings")
     centroids = emb.filter(F.col("vec_id") < 8)
     queries = emb.filter(_query_pred())
     return SIM.ivf_topk(queries, emb, centroids, "vec_id", "embedding", 3)
@@ -88,14 +88,14 @@ register(
             SELECT e.vec_id, e.embedding, c.centroid_id,
                    row_number() OVER (
                        PARTITION BY e.vec_id
-                       ORDER BY round({_COS_SQL.format(a='e.embedding', b='c.cvec')}, 6) DESC,
+                       ORDER BY round({SIM.COS_SQL.format(a='e.embedding', b='c.cvec')}, 6) DESC,
                                 c.centroid_id) AS rn
             FROM embeddings e, centroids c
         ) WHERE rn = 1
     ),
     scored AS (
         SELECT q.vec_id AS query_id, a.vec_id AS neighbor_id,
-               round({_COS_SQL.format(a='q.embedding', b='a.embedding')}, 6) AS cosine
+               round({SIM.COS_SQL.format(a='q.embedding', b='a.embedding')}, 6) AS cosine
         FROM assigned q
         JOIN assigned a ON q.centroid_id = a.centroid_id AND a.vec_id != q.vec_id
         WHERE q.vec_id % 25 = 0 AND q.vec_id < 500
@@ -119,7 +119,7 @@ register(
 
 
 def _ivf_nprobe2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = load_table(spark, sf_dir, "embeddings")
     centroids = emb.filter(F.col("vec_id") < 8)
     queries = emb.filter(_query_pred())
     return SIM.ivf_topk(
@@ -139,7 +139,7 @@ register(
         SELECT e.vec_id, e.embedding, c.centroid_id,
                row_number() OVER (
                    PARTITION BY e.vec_id
-                   ORDER BY round({_COS_SQL.format(a='e.embedding', b='c.cvec')}, 6) DESC,
+                   ORDER BY round({SIM.COS_SQL.format(a='e.embedding', b='c.cvec')}, 6) DESC,
                             c.centroid_id) AS rn
         FROM embeddings e, centroids c
     ),
@@ -152,7 +152,7 @@ register(
     ),
     scored AS (
         SELECT q.vec_id AS query_id, a.vec_id AS neighbor_id,
-               round({_COS_SQL.format(a='q.embedding', b='a.embedding')}, 6) AS cosine
+               round({SIM.COS_SQL.format(a='q.embedding', b='a.embedding')}, 6) AS cosine
         FROM q_assigned q
         JOIN assigned a ON q.centroid_id = a.centroid_id AND a.vec_id != q.vec_id
     ),
@@ -172,7 +172,7 @@ register(
 
 
 def _norms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = load_table(spark, sf_dir, "embeddings")
     norm2 = F.aggregate(
         F.transform(
             "embedding", lambda x: x.cast("double") * x.cast("double")
@@ -223,7 +223,7 @@ def _normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     sequential list_sum cannot flip a digit."""
     from orchestrated_etl_spark.functions.similarity import l2_normalize_pandas_udf
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = load_table(spark, sf_dir, "embeddings")
     unit = emb.select(
         "vec_id",
         l2_normalize_pandas_udf()(F.col("embedding")).alias("u"),
@@ -264,7 +264,7 @@ def _udaf_mean_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
     summation)."""
     from orchestrated_etl_spark.functions.similarity import mean_norm_grouped_udaf
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = load_table(spark, sf_dir, "embeddings")
     udaf = mean_norm_grouped_udaf()
     # Grouped-agg pandas UDFs cannot share an agg() with JVM aggregates
     # (INVALID_PANDAS_UDF_PLACEMENT) — compute separately, join on the key.
@@ -298,7 +298,7 @@ def _groupmap_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from orchestrated_etl_spark.functions.dedup import vec_norm
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = load_table(spark, sf_dir, "embeddings")
     norms = emb.select(
         "vec_id", "label", F.round(vec_norm(F.col("embedding")), 9).alias("l2")
     )
@@ -343,7 +343,7 @@ def _kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     instead."""
     from orchestrated_etl_spark.functions.similarity import kmeans_refine
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = load_table(spark, sf_dir, "embeddings")
     cen = kmeans_refine(emb, "vec_id", "embedding", k=8, iters=3)
     return cen.select(
         "centroid_id",
@@ -363,7 +363,7 @@ def _sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
     approximate scores are exact integers — no float tolerance anywhere
     in the ranking). Same fixed-size 20-query set as the other sim_*
     queries."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(_query_pred())
     return SIM.sq8_topk(queries, emb, "vec_id", "embedding", 5)
 
@@ -401,7 +401,7 @@ register(
         ) WHERE rank <= 5
     )
     SELECT t.query_id, t.neighbor_id, t.score_q8, t.rank,
-           round({_COS_SQL.format(a='qe.embedding', b='ne.embedding')}, 6) AS cosine
+           round({SIM.COS_SQL.format(a='qe.embedding', b='ne.embedding')}, 6) AS cosine
     FROM topk t
     JOIN embeddings qe ON qe.vec_id = t.query_id
     JOIN embeddings ne ON ne.vec_id = t.neighbor_id
@@ -431,7 +431,7 @@ def _mapinarrow_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
                 names=["vec_id", "l2"],
             )
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = load_table(spark, sf_dir, "embeddings")
     emb = emb.repartition(
         shuffle_width(spark), F.col("vec_id")
     )
@@ -472,7 +472,7 @@ def _mrl_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     touches |Q| x 20 full vectors via broadcast id-join."""
     from orchestrated_etl_spark.functions.dedup import dot, vec_norm
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(_query_pred())
     prefix = F.slice("embedding", 1, 16)
     c = emb.repartition(
@@ -573,117 +573,15 @@ register(
         ) WHERE rn <= 20
     )
     SELECT t.query_id, t.neighbor_id, t.pre_cosine,
-           round({_COS_SQL.format(a='qe.embedding', b='ne.embedding')}, 6)
+           round({SIM.COS_SQL.format(a='qe.embedding', b='ne.embedding')}, 6)
                AS cosine,
            CAST(row_number() OVER (PARTITION BY t.query_id ORDER BY
-                round({_COS_SQL.format(a='qe.embedding', b='ne.embedding')}, 6)
+                round({SIM.COS_SQL.format(a='qe.embedding', b='ne.embedding')}, 6)
                     DESC, t.neighbor_id) AS INTEGER) AS rank
     FROM cands t
     JOIN embeddings qe ON qe.vec_id = t.query_id
     JOIN embeddings ne ON ne.vec_id = t.neighbor_id
     QUALIFY rank <= 5
-    """,
-)
-
-
-# ---------------------------------------------------------------------------
-# SemDedup: semantic deduplication inside centroid clusters
-# ---------------------------------------------------------------------------
-
-_SEMDEDUP_THRESHOLD = 0.4
-
-
-def _semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDedup (Abbas et al. 2023-style semantic dedup): cluster the
-    embedding space, then drop any vector whose cosine to a LOWER-id
-    member of its OWN cluster exceeds the threshold — near-duplicate
-    semantics without an all-pairs corpus join, because candidate pairs
-    exist only within a cluster. Emits every vector with its cluster and
-    keep/drop decision (the linear-output format, like
-    dedup_cluster_components).
-
-    Plan shape: nearest-centroid assignment is a broadcast-K map pass
-    with a max_by argmax (no window over the corpus,
-    functions/similarity.assign_to_centroids); the within-cluster
-    pairwise scoring is the algorithm's defining cost, bounded by
-    Σ cluster_size². Scale calculus (measured, SCALING.md): fixed K is
-    quadratic in N; K ∝ N linearizes the pairs but makes the N·K
-    assignment the quadratic term — the balanced choice is K = Θ(√N)
-    (both terms N·√N), and production runs push assignment below N·K
-    with a two-level centroid tree (broadcast the coarse √K level,
-    probe only its children). The fixture's K=8 stands in for a
-    corpus-sized trained K; the decision join shuffles only (id,
-    cluster, bool) rows. Deterministic: assignment and drops both rank
-    on the ROUNDED cosine with id tie-breaks."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    centroids = emb.filter(F.col("vec_id") < 8)
-    assigned = SIM.assign_to_centroids(
-        emb, centroids, "vec_id", "embedding"
-    ).localCheckpoint(eager=True)  # feeds both pair sides + the output
-    a = assigned.select(
-        F.col("_id").alias("id_a"), F.col("_vec").alias("_va"), "centroid_id"
-    ).withColumn("_na", SIM.vec_norm(F.col("_va")))
-    b = assigned.select(
-        F.col("_id").alias("id_b"),
-        F.col("_vec").alias("_vb"),
-        F.col("centroid_id").alias("_cb"),
-    ).withColumn("_nb", SIM.vec_norm(F.col("_vb")))
-    pairs = a.join(
-        b,
-        (F.col("centroid_id") == F.col("_cb"))
-        & (F.col("id_b") < F.col("id_a")),
-    )
-    cos = F.round(
-        F.try_divide(
-            SIM.dot(F.col("_va"), F.col("_vb")),
-            F.col("_na") * F.col("_nb"),
-        ),
-        6,
-    )
-    dropped = (
-        pairs.where(cos >= _SEMDEDUP_THRESHOLD)
-        .select(F.col("id_a").alias("vec_id"))
-        .distinct()
-        .withColumn("_d", F.lit(1))
-    )
-    return (
-        assigned.select(F.col("_id").alias("vec_id"), "centroid_id")
-        .join(dropped, "vec_id", "left")
-        .select(
-            "vec_id",
-            "centroid_id",
-            F.col("_d").isNotNull().alias("dropped"),
-        )
-    )
-
-
-register(
-    "dedup_semantic_clusters",
-    _semdedup,
-    f"""
-    WITH centroids AS (
-        SELECT vec_id AS centroid_id, embedding AS cvec
-        FROM embeddings WHERE vec_id < 8
-    ),
-    assigned AS (
-        SELECT vec_id, embedding, centroid_id FROM (
-            SELECT e.vec_id, e.embedding, c.centroid_id,
-                   row_number() OVER (
-                       PARTITION BY e.vec_id
-                       ORDER BY round({_COS_SQL.format(a='e.embedding', b='c.cvec')}, 6) DESC,
-                                c.centroid_id) AS rn
-            FROM embeddings e, centroids c
-        ) WHERE rn = 1
-    )
-    SELECT a.vec_id, a.centroid_id,
-           EXISTS (
-               SELECT 1 FROM assigned b
-               WHERE b.centroid_id = a.centroid_id
-                 AND b.vec_id < a.vec_id
-                 AND round({_COS_SQL.format(a='a.embedding', b='b.embedding')}, 6)
-                     >= {_SEMDEDUP_THRESHOLD}
-           ) AS dropped
-    FROM assigned a
     """,
 )
 
@@ -711,7 +609,7 @@ def _tree_assign_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     recall-style metric a production run tracks when tuning fanout.
     Both assignments rank on ROUNDED cosine with id tie-breaks; all
     joins are broadcast map passes; one final 8-row aggregate."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = load_table(spark, sf_dir, "embeddings")
     centroids = emb.filter(F.col("vec_id") < 8)
     flat = SIM.assign_to_centroids(
         emb, centroids, "vec_id", "embedding"
@@ -789,7 +687,7 @@ register(
             SELECT e.vec_id, c.centroid_id,
                    row_number() OVER (
                        PARTITION BY e.vec_id
-                       ORDER BY round({_COS_SQL.format(a='e.embedding', b='c.cvec')}, 6) DESC,
+                       ORDER BY round({SIM.COS_SQL.format(a='e.embedding', b='c.cvec')}, 6) DESC,
                                 c.centroid_id) AS rn
             FROM embeddings e, centroids c
         ) WHERE rn = 1
@@ -802,7 +700,7 @@ register(
             SELECT e.vec_id, p.grp,
                    row_number() OVER (
                        PARTITION BY e.vec_id
-                       ORDER BY round({_COS_SQL.format(a='e.embedding', b='p.pvec')}, 6) DESC,
+                       ORDER BY round({SIM.COS_SQL.format(a='e.embedding', b='p.pvec')}, 6) DESC,
                                 p.grp) AS rn
             FROM embeddings e, pivots p
         ) WHERE rn = 1
@@ -812,7 +710,7 @@ register(
             SELECT e.vec_id, c.centroid_id AS fine_cid,
                    row_number() OVER (
                        PARTITION BY e.vec_id
-                       ORDER BY round({_COS_SQL.format(a='e.embedding', b='c.cvec')}, 6) DESC,
+                       ORDER BY round({SIM.COS_SQL.format(a='e.embedding', b='c.cvec')}, 6) DESC,
                                 c.centroid_id) AS rn
             FROM embeddings e
             JOIN routed r ON r.vec_id = e.vec_id
@@ -854,7 +752,7 @@ def _brp_lsh_mllib(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.ml.feature import BucketedRandomProjectionLSH
     from pyspark.ml.functions import array_to_vector
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = load_table(spark, sf_dir, "embeddings")
     feats = emb.select(
         "vec_id",
         F.col("embedding").alias("_arr"),
@@ -941,7 +839,7 @@ def _kmeans_step_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     fine at IVF centroid-training scale (clusters are corpus/K); the
     production unordered tree-reduce trades bit-reproducibility for
     unbounded clusters, which is exactly why that variant is rows-only."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = load_table(spark, sf_dir, "embeddings")
     centroids = emb.filter(F.col("vec_id") < 8)
     assigned = SIM.assign_to_centroids(emb, centroids, "vec_id", "embedding")
     members = assigned.groupBy("centroid_id").agg(
@@ -985,7 +883,7 @@ register(
             SELECT e.vec_id, e.embedding, c.centroid_id,
                    row_number() OVER (
                        PARTITION BY e.vec_id
-                       ORDER BY round({_COS_SQL.format(a='e.embedding', b='c.cvec')}, 6) DESC,
+                       ORDER BY round({SIM.COS_SQL.format(a='e.embedding', b='c.cvec')}, 6) DESC,
                                 c.centroid_id) AS rn
             FROM embeddings e, centroids c
         ) WHERE rn = 1
@@ -1005,5 +903,214 @@ register(
                  s -> (s / n_members) * (s / n_members)))), 6) AS new_l2,
            round(vsum[1] / n_members, 6) AS new_c0
     FROM folded
+    """,
+)
+
+
+# ---------------------------------------------------------------------------
+# random-hyperplane LSH (cosine space)
+# ---------------------------------------------------------------------------
+
+_N_PLANES = 6
+_DIM = 64
+_COSINE_THRESHOLD = 0.4  # same bar as dedup_embedding_cosine
+
+
+def _plane_signs() -> list[list[int]]:
+    """±1 hyperplane components derived from md5 — deterministic without
+    any RNG, so the Spark query and the SQL oracle inline the SAME planes
+    (and a rerun on another cluster buckets identically)."""
+    return [
+        [
+            1 if int(hashlib.md5(f"plane{p}:dim{d}".encode()).hexdigest()[:2], 16) % 2 == 0 else -1
+            for d in range(_DIM)
+        ]
+        for p in range(_N_PLANES)
+    ]
+
+
+def _hyperplane_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Random-hyperplane LSH over the embedding corpus: each vector's
+    signature is the sign pattern of its dot products with fixed ±1
+    hyperplanes (a map-only JVM expression — SimHash for real-valued
+    vectors), vectors sharing a signature become candidate pairs, and
+    candidates are verified with the exact cosine. Per-bucket stats:
+    candidate count vs verified count = the precision the banding bought.
+    The all-pairs comparison this replaces is |C|²; here the self-join is
+    per-bucket (E[size] = |C| / 2^n_planes)."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    planes = _plane_signs()
+    sig = None
+    for p, signs in enumerate(planes):
+        plane_col = F.array(*[F.lit(float(s)) for s in signs])
+        d = F.aggregate(
+            F.zip_with(
+                "embedding", plane_col, lambda x, y: x.cast("double") * y
+            ),
+            F.lit(0.0),
+            lambda acc, x: acc + x,
+        )
+        bit = F.when(d >= 0, F.lit(1 << p)).otherwise(F.lit(0))
+        sig = bit if sig is None else sig + bit
+    tagged = emb.select("vec_id", "embedding", sig.alias("signature"))
+    buckets = tagged.groupBy("signature").agg(
+        F.count(F.lit(1)).alias("n_vectors"),
+        (F.count(F.lit(1)) * (F.count(F.lit(1)) - 1) / 2)
+        .cast("long")
+        .alias("n_candidate_pairs"),
+    )
+    a = tagged.alias("a")
+    b = tagged.alias("b")
+    verified = (
+        a.join(
+            b,
+            (F.col("a.signature") == F.col("b.signature"))
+            & (F.col("a.vec_id") < F.col("b.vec_id")),
+        )
+        .where(
+            F.round(cosine(F.col("a.embedding"), F.col("b.embedding")), 6)
+            >= _COSINE_THRESHOLD
+        )
+        .groupBy(F.col("a.signature").alias("signature"))
+        .agg(F.count(F.lit(1)).alias("n_verified_pairs"))
+    )
+    return (
+        buckets.join(verified, "signature", "left")
+        .select(
+            "signature",
+            "n_vectors",
+            "n_candidate_pairs",
+            F.coalesce("n_verified_pairs", F.lit(0)).alias("n_verified_pairs"),
+        )
+    )
+
+
+def _lsh_oracle() -> str:
+    planes = _plane_signs()
+    bit_terms = " + ".join(
+        f"(CASE WHEN list_dot_product(CAST(embedding AS DOUBLE[]), "
+        f"[{', '.join(f'{s}.0' for s in signs)}]) >= 0 THEN {1 << p} ELSE 0 END)"
+        for p, signs in enumerate(planes)
+    )
+    return f"""
+    WITH tagged AS (
+        SELECT vec_id, embedding, {bit_terms} AS signature FROM embeddings
+    ),
+    buckets AS (
+        SELECT signature, CAST(count(*) AS BIGINT) AS n_vectors,
+               CAST(count(*) * (count(*) - 1) / 2 AS BIGINT)
+                   AS n_candidate_pairs
+        FROM tagged GROUP BY signature
+    ),
+    verified AS (
+        SELECT a.signature, CAST(count(*) AS BIGINT) AS n_verified_pairs
+        FROM tagged a JOIN tagged b
+          ON a.signature = b.signature AND a.vec_id < b.vec_id
+        WHERE round(
+                list_dot_product(CAST(a.embedding AS DOUBLE[]),
+                                 CAST(b.embedding AS DOUBLE[]))
+                / (sqrt(list_dot_product(CAST(a.embedding AS DOUBLE[]),
+                                         CAST(a.embedding AS DOUBLE[])))
+                   * sqrt(list_dot_product(CAST(b.embedding AS DOUBLE[]),
+                                           CAST(b.embedding AS DOUBLE[])))),
+                6) >= {_COSINE_THRESHOLD}
+        GROUP BY a.signature
+    )
+    SELECT b.signature, b.n_vectors, b.n_candidate_pairs,
+           coalesce(v.n_verified_pairs, 0) AS n_verified_pairs
+    FROM buckets b LEFT JOIN verified v ON b.signature = v.signature
+    """
+
+
+register("sim_hyperplane_lsh", _hyperplane_lsh, _lsh_oracle())
+
+
+# ---------------------------------------------------------------------------
+# label-centroid cosine similarity matrix
+# ---------------------------------------------------------------------------
+
+
+def _label_centroid_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Pairwise cosine similarity between per-label embedding
+    centroids — the class-confusability / cluster-quality readout
+    (labels whose centroids nearly coincide are candidates for
+    merging; for corpora, sources whose centroid similarity is high
+    carry redundant content). Centroids are per-(label, dim) means
+    from ONE posexplode pass; the pair join is dim-keyed over the
+    K·d-sized centroid relation, never the corpus. Mean/dot/norm
+    summation order differs between engines, and cosines are
+    genuinely irrational → round(,6) tolerance (float-policy
+    exception c).
+
+    Scale: corpus-sized work is the single explode+aggregate; the
+    K²·d pair stage is centroid-sized (K labels, d dims). The exact
+    same shape serves source-vs-source redundancy at any corpus
+    size."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    cent = (
+        emb.select("label", F.posexplode("embedding").alias("dim", "v"))
+        .groupBy("label", "dim")
+        .agg(F.avg("v").alias("c"))
+        .localCheckpoint(eager=True)  # feeds norms AND the pair join
+    )
+    norms = cent.groupBy("label").agg(
+        F.sqrt(F.sum(F.col("c") * F.col("c"))).alias("nrm")
+    )
+    a = cent.select(
+        F.col("label").alias("label_a"), "dim", F.col("c").alias("ca")
+    )
+    b = cent.select(
+        F.col("label").alias("label_b"), "dim", F.col("c").alias("cb")
+    )
+    dots = (
+        a.join(b, "dim")
+        .where(F.col("label_a") < F.col("label_b"))
+        .groupBy("label_a", "label_b")
+        .agg(F.sum(F.col("ca") * F.col("cb")).alias("dot"))
+    )
+    na = norms.select(
+        F.col("label").alias("label_a"), F.col("nrm").alias("na")
+    )
+    nb = norms.select(
+        F.col("label").alias("label_b"), F.col("nrm").alias("nb")
+    )
+    return (
+        dots.join(F.broadcast(na), "label_a")
+        .join(F.broadcast(nb), "label_b")
+        .select(
+            "label_a",
+            "label_b",
+            F.round(
+                F.col("dot") / (F.col("na") * F.col("nb")), 6
+            ).alias("cos_sim"),
+        )
+    )
+
+
+register(
+    "sim_label_centroid_matrix",
+    _label_centroid_matrix,
+    """
+    WITH cent AS (
+        SELECT label, CAST(t.i - 1 AS INTEGER) AS dim,
+               avg(embedding[CAST(t.i AS INTEGER)]) AS c
+        FROM embeddings, range(1, 4097) AS t(i)
+        WHERE t.i <= len(embedding)
+        GROUP BY 1, 2
+    ),
+    norms AS (
+        SELECT label, sqrt(sum(c * c)) AS nrm FROM cent GROUP BY label
+    ),
+    dots AS (
+        SELECT a.label AS label_a, b.label AS label_b,
+               sum(a.c * b.c) AS dot
+        FROM cent a JOIN cent b ON a.dim = b.dim AND a.label < b.label
+        GROUP BY 1, 2
+    )
+    SELECT d.label_a, d.label_b,
+           round(d.dot / (na.nrm * nb.nrm), 6) AS cos_sim
+    FROM dots d
+    JOIN norms na ON d.label_a = na.label
+    JOIN norms nb ON d.label_b = nb.label
     """,
 )

@@ -3,18 +3,29 @@
 Most are oracle-checked: with a single-file source, Trigger.AvailableNow
 processes everything in ONE micro-batch, so complete-mode aggregations,
 dedup, and inner interval joins produce exactly the batch result — which
-IS SQL-expressible. Double sums accumulate in DECIMAL on both engines
+IS SQL-expressible. Multi-batch queries whose final table is batch-equal
+(append or complete mode over a deterministic file set) carry full
+oracles too. Double sums accumulate in DECIMAL on both engines
 (order-exact) where an oracle compares them. Only genuinely
 state-semantics-dependent queries (applyInPandasWithState running
 totals, dedup-within-watermark re-emission) stay rows-only, pinned
-against batch twins in tests/test_streaming.py instead."""
+against batch twins in tests/test_streaming.py instead. Queries that
+write files use the fixed ``sources.sinks.scratch_dir`` path and remove
+it before writing.
+"""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from orchestrated_etl_spark.operators.standardise import (
+    QUARANTINE_SQL,
+    quarantine_route,
+)
 from orchestrated_etl_spark.registry import register
+from orchestrated_etl_spark.sources.books_source import books_oracle_cte
+from orchestrated_etl_spark.sources.catalog import read_events
 from orchestrated_etl_spark.streaming import windows as W
 from orchestrated_etl_spark.streaming.events_stream import (
     read_events_stream,
@@ -173,12 +184,12 @@ def _foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate equals the plain batch aggregate no matter how the stream
     was micro-batched, so this one IS oracle-checkable."""
     import shutil
-    import tempfile
 
     from orchestrated_etl_spark.sources import sinks as K
 
-    target = tempfile.mkdtemp(prefix="febatch_") + "/events"
-    shutil.rmtree(target, ignore_errors=True)
+    base = K.scratch_dir("foreachbatch", sf_dir)
+    shutil.rmtree(base, ignore_errors=True)
+    target = f"{base}/events"
     ev = read_events_stream(spark, sf_dir).select(
         "event_id", "event_type", "value"
     )
@@ -188,7 +199,7 @@ def _foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
                 batch_df, target, mode="append"
             )
         )
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
+        .option("checkpointLocation", f"{base}/ckpt")
         .trigger(availableNow=True)
         .start()
     )
@@ -375,9 +386,6 @@ def _books_stream_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
         q.stop()
     return spark.table(qname)
 
-
-from orchestrated_etl_spark.sources.books_source import books_oracle_cte  # noqa: E402
-
 register(
     "stream_books_pages",
     _books_stream_pages,
@@ -472,14 +480,9 @@ def _stream_binary_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     table is batch-equal regardless of batch boundaries, so this
     streaming query carries a full oracle (same relation as
     src_binary_file_source)."""
-    from orchestrated_etl_spark.queries.scale_ops import (
-        _binary_file_source,
-        _scratch,
-    )
+    from orchestrated_etl_spark.sources.catalog import nation_binary_files
 
-    # ensure the .bin fixture files exist (same prep as the batch query)
-    _binary_file_source(spark, sf_dir).count()
-    base = _scratch("binfiles", sf_dir)
+    base = nation_binary_files(spark, sf_dir)
     raw = (
         spark.readStream.format("binaryFile")
         .schema(
@@ -531,11 +534,12 @@ def _stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     decouple read/write lineage (self-read-overwrite hazard)."""
     import os
     import shutil
-    import tempfile
 
     from orchestrated_etl_spark.sources.catalog import read_events
+    from orchestrated_etl_spark.sources.sinks import scratch_dir
 
-    work = tempfile.mkdtemp(prefix="cdc_upsert_")
+    work = scratch_dir("cdc_upsert", sf_dir)
+    shutil.rmtree(work, ignore_errors=True)
     src = f"{work}/feed"
     target = f"{work}/dim_user_latest"
     # driver-side prep: split the fixed events table into 6 feed files
@@ -604,10 +608,8 @@ def _stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_id").alias("last_event_id"),
         F.col("value").alias("last_value"),
     )
-    # materialize before the temp dir is reclaimed by later reruns
-    out = out.localCheckpoint(eager=True)
-    shutil.rmtree(work, ignore_errors=True)
-    return out
+    # materialize: the next build removes the scratch dir
+    return out.localCheckpoint(eager=True)
 
 
 register(
@@ -701,11 +703,13 @@ def _tumbling_multibatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     time, so any window state mishandling (premature eviction, lost
     partials) would corrupt the totals. DECIMAL accumulation keeps the
     sums order-exact across batch boundaries."""
-    import tempfile
+    import shutil
 
     from orchestrated_etl_spark.sources.catalog import read_events
+    from orchestrated_etl_spark.sources.sinks import scratch_dir
 
-    work = tempfile.mkdtemp(prefix="tumble_mb_")
+    work = scratch_dir("tumble_mb", sf_dir)
+    shutil.rmtree(work, ignore_errors=True)
     src = f"{work}/feed"
     (
         read_events(spark, sf_dir)
@@ -752,4 +756,42 @@ register(
                AS window_end
     FROM events GROUP BY event_type, date_trunc('day', ts)
     """,
+)
+
+
+def _stream_quarantine_split(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Streaming expectations routing: the SAME quarantine rule set as
+    dq_quarantine_split evaluated over a file stream consumed 2 files
+    per trigger (6 feed files → 3 micro-batches), append mode. The
+    rules are stateless row maps, so the final quarantine table is
+    batch-equal regardless of micro-batch boundaries — which is why
+    this streaming query carries the FULL batch oracle (the
+    stream_binary_files determinism argument). This is the live half
+    of the DLT-expectations pattern: bad rows divert to a quarantine
+    sink as they ARRIVE, instead of being found by tomorrow's audit."""
+    import shutil
+
+    from orchestrated_etl_spark.sources.sinks import scratch_dir
+
+    work = scratch_dir("quarantine_stream", sf_dir)
+    shutil.rmtree(work, ignore_errors=True)
+    src = f"{work}/feed"
+    ev = read_events(spark, sf_dir)
+    ev.repartition(6).write.parquet(src)
+    stream = (
+        spark.readStream.schema(ev.schema)
+        .option("maxFilesPerTrigger", 2)
+        .parquet(src)
+    )
+    from orchestrated_etl_spark.streaming.events_stream import (
+        run_available_now,
+    )
+
+    return run_available_now(quarantine_route(stream), output_mode="append")
+
+
+register(
+    "stream_quarantine_split",
+    _stream_quarantine_split,
+    QUARANTINE_SQL,
 )

@@ -92,25 +92,13 @@ _FRONT = [
 ]
 
 
-def _ordered(d: dict) -> dict:
-    front = {n: d[n] for n in _FRONT if n in d}
-    rest = {n: v for n, v in d.items() if n not in front}
-    return {**front, **rest}
-
-
 _ORDER_FILE = Path(__file__).resolve().parents[1] / "REGISTRATION_ORDER.txt"
 
 
-def frozen_registration_order() -> list[str] | None:
-    """The committed canonical registration order, or None if absent.
-
-    ``REGISTRATION_ORDER.txt`` (repo root, written by
-    ``tools/gen_registration_order.py`` from a fresh interpreter) pins
-    the staleness tie-break to a diffable artifact so `_FRONT` is
-    auditable from files alone. Lines starting with ``#`` are comments.
-    """
-    if not _ORDER_FILE.exists():
-        return None
+def frozen_registration_order() -> list[str]:
+    """The committed registration order: ``REGISTRATION_ORDER.txt`` at
+    the repo root (maintained by ``tools/gen_registration_order.py``),
+    one query name per line; lines starting with ``#`` are comments."""
     return [
         ln.strip()
         for ln in _ORDER_FILE.read_text().splitlines()
@@ -119,41 +107,33 @@ def frozen_registration_order() -> list[str] | None:
 
 
 def registration_order() -> list[str]:
-    """Raw registration order, BEFORE ``_ordered()`` fronting.
+    """Every registered name in artifact line order, BEFORE ``_FRONT``
+    is moved first. This is the documented staleness tie-break:
+    ``_FRONT`` is recomputed each round as the 50 stalest by
+    ``(last_green_round, registration order)``. ``queries()`` cannot
+    serve as the tie-break source because its iteration order moves the
+    current front first.
 
-    This is the documented staleness tie-break: ``_FRONT`` is recomputed
-    each round as the 50 stalest by ``(last_green_round, registration
-    order)``. ``queries()`` cannot serve as the tie-break source because
-    its iteration order moves the current front first — stable today
-    (the front always holds the newest samples) but wrong in a
-    driver-skip round where front members stay stale.
-
-    CANONICAL ONLY FROM A FRESH INTERPRETER: dict order here is import
-    order, so the canonical sequence is what ``_load_all()`` produces
-    when no query module was imported earlier. A process that imports
-    query modules directly before calling this (pytest does) gets a
-    permuted order — prefer ``frozen_registration_order()`` (the
-    committed artifact) for any ordering decision, the way
-    ``tools/rotate_front.py`` does.
-
-    Validates live MEMBERSHIP against the committed artifact when one
-    exists (set equality — order-insensitive, hence safe to call from
-    pytest's permuted import state; the full ordered sequence is pinned
-    by a fresh-subprocess pytest contract instead). Registering or
-    removing a query without regenerating the artifact raises here.
-    """
+    Registering or removing a query without updating the artifact
+    raises here."""
     _load_all()
-    live = list(_QUERIES)
     frozen = frozen_registration_order()
-    if frozen is not None and set(frozen) != set(live):
-        added = sorted(set(live) - set(frozen))
-        removed = sorted(set(frozen) - set(live))
+    if set(frozen) != set(_QUERIES):
+        added = sorted(set(_QUERIES) - set(frozen))
+        removed = sorted(set(frozen) - set(_QUERIES))
         raise RuntimeError(
             "REGISTRATION_ORDER.txt is stale vs the live registry "
             f"(added={added}, removed={removed}) — rerun "
-            "`python tools/gen_registration_order.py` standalone."
+            "`python tools/gen_registration_order.py`."
         )
-    return live
+    return frozen
+
+
+def _ordered(d: dict) -> dict:
+    """``d`` keyed in driver order: ``_FRONT`` first, then the rest in
+    registration order."""
+    names = _FRONT + [n for n in registration_order() if n not in _FRONT]
+    return {n: d[n] for n in names if n in d}
 
 
 def queries() -> dict[str, QueryFn]:

@@ -11,11 +11,13 @@ pruning there is the single biggest lever.
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from orchestrated_etl_spark import schemas
+from orchestrated_etl_spark.sources.sinks import scratch_dir
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -27,6 +29,30 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
         return read_events(spark, sf_dir)
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+
+
+def register_views(
+    spark: SparkSession, sf_dir: str, *tables: str, view: str = "v_{}"
+) -> None:
+    """Expose fixture tables to ``spark.sql`` as temp views named
+    ``view.format(table)``."""
+    for t in tables:
+        load_table(spark, sf_dir, t).createOrReplaceTempView(view.format(t))
+
+
+def nation_binary_files(spark: SparkSession, sf_dir: str) -> str:
+    """Write one small ``<n_nationkey>.bin`` file holding the nation name
+    per nation (rewritten on every call; dimension-sized driver-side
+    prep) and return their directory — the fixture behind the
+    binaryFile batch and stream sources."""
+    base = scratch_dir("binfiles", sf_dir)
+    shutil.rmtree(base, ignore_errors=True)
+    os.makedirs(base, exist_ok=True)
+    nation = load_table(spark, sf_dir, "nation")
+    for row in nation.select("n_nationkey", "n_name").collect():
+        with open(f"{base}/{row['n_nationkey']:03d}.bin", "wb") as fh:
+            fh.write(row["n_name"].encode("utf-8"))
+    return base
 
 
 def nanos_to_micros_ts(col: str = "ts"):
@@ -87,42 +113,3 @@ def read_orc(spark: SparkSession, path: str, schema, **options) -> DataFrame:
     pruning + predicate pushdown both apply; the declared schema guards
     against drift between writer and reader versions)."""
     return spark.read.options(**options).schema(schema).orc(path)
-
-
-class Catalog:
-    """All fixture tables of one scale factor, lazily loaded and cached.
-
-    ``cat.lineitem`` / ``cat['lineitem']`` return the DataFrame;
-    ``cat.dim(name)`` returns a FIXED-DOMAIN dimension (nation/region —
-    schemas.BROADCAST_TABLES) with a broadcast hint. Growing dimensions
-    (supplier/customer/part) are deliberately NOT eligible: a forced
-    hint never falls back past the threshold, so at 100 TB it OOMs
-    executors — read them plain and let threshold/AQE pick broadcast
-    while they are actually small (the r14-r16 forced-broadcast rule).
-    """
-
-    def __init__(self, spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR):
-        self.spark = spark
-        self.sf_dir = sf_dir
-        self._cache: dict[str, DataFrame] = {}
-
-    def __getitem__(self, name: str) -> DataFrame:
-        if name not in self._cache:
-            self._cache[name] = load_table(self.spark, self.sf_dir, name)
-        return self._cache[name]
-
-    def __getattr__(self, name: str) -> DataFrame:
-        if name.startswith("_") or name not in schemas.TABLES:
-            raise AttributeError(name)
-        return self[name]
-
-    def dim(self, name: str) -> DataFrame:
-        """A dimension table with an explicit broadcast hint."""
-        if name not in schemas.BROADCAST_TABLES:
-            raise KeyError(f"{name!r} is not a broadcast-safe dimension")
-        return F.broadcast(self[name])
-
-    def register_views(self) -> None:
-        """Expose every table as a SQL temp view (spark.sql access path)."""
-        for name in schemas.TABLES:
-            self[name].createOrReplaceTempView(name)

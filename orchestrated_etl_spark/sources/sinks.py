@@ -11,7 +11,20 @@ dags/dag.py:54,204) are explicit columns on the way out.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame
+
+
+def scratch_dir(name: str, sf_dir: str) -> str:
+    """Per-query, per-scale-factor scratch path ``.scratch/<name>_<sf
+    tag>`` at the repo root (gitignored). The path is fixed, so a query
+    that writes there removes it first and every rebuild reuses it."""
+    tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
+    path = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__)))), ".scratch", f"{name}_{tag}")
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    return path
 
 
 def write_parquet(

@@ -50,7 +50,7 @@ def test_zero_weight_gives_null(spark):
 
 
 def test_flagship_runs_on_fixtures(spark, sf_dir):
-    from orchestrated_etl_spark.operators.enrich import flagship
+    from orchestrated_etl_spark.queries.reference import flagship
 
     out = flagship(spark, sf_dir)
     rows = out.collect()

@@ -91,8 +91,8 @@ def test_walk_centrality_star(spark, sf_dir):
     integer recurrence, checked two rounds deep by hand.
     W0 = 1 everywhere; W1(hub) = 3, W1(leaf) = 1;
     W2(hub) = 3, W2(leaf) = 3; W3(hub) = 9, W3(leaf) = 3."""
-    from orchestrated_etl_spark.queries.graph_wave10 import (
-        _graph_walk_centrality,  # noqa: F401  (registry import path)
+    from orchestrated_etl_spark.queries.graph import (  # noqa: F401
+        _graph_walk_centrality,
     )
 
     star = _edges_df(spark, [(1, 2), (1, 3), (1, 4)])
@@ -232,9 +232,7 @@ def _assert_bfs_round_join_is_exchange_free(spark, tmp_path):
     import pyarrow.parquet as pq
 
     from orchestrated_etl_spark.compat import staged_checkpoint
-    from orchestrated_etl_spark.queries.graph_wave10 import (
-        cached_undirected_layout,
-    )
+    from orchestrated_etl_spark.functions.graph import cached_undirected_layout
 
     orders = [o for o in range(200) for _ in range(2)]
     pq.write_table(

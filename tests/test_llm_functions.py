@@ -416,9 +416,7 @@ def test_temperature_mixture_flattens_composition(spark, sf_dir):
     toward its square root). The fixture's languages are skewed
     (en ≈ 3.4x fr), so the data-dependent path is genuinely
     exercised."""
-    from orchestrated_etl_spark.queries.training_pipeline import (
-        _temperature_mixture,
-    )
+    from orchestrated_etl_spark.queries.training import _temperature_mixture
 
     rows = _temperature_mixture(spark, sf_dir).collect()
     by_n = sorted(rows, key=lambda r: r["n_docs"])
@@ -475,7 +473,7 @@ def test_scene_cut_counts_on_hand_built_frames(spark):
     (NULL lag), and n_cuts equals the explicit python recount."""
     import hashlib
 
-    from orchestrated_etl_spark.queries.llm_multimodal import _scene_cut
+    from orchestrated_etl_spark.queries.multimodal import _scene_cut
 
     # run on the real fixture but recompute one doc's cuts in python
     sf = "/root/testdata/sf0.001"

@@ -11,14 +11,14 @@ import os
 
 import pyarrow.parquet as pq
 
-from orchestrated_etl_spark.queries.ops_wave11 import (
+from orchestrated_etl_spark.queries.io import (
     _dq_constraint_audit,
     _sink_clustered_write,
-    _sink_zorder_write,
     _sink_compacted_roundtrip,
+    _sink_zorder_write,
     _src_file_lineage,
 )
-from orchestrated_etl_spark.queries.scale_ops import _scratch
+from orchestrated_etl_spark.sources.sinks import scratch_dir
 
 
 # ---------------------------------------------------------------------------
@@ -87,7 +87,7 @@ def test_dq_audit_detects_injected_violations(spark, sf_dir, tmp_path):
 
 def test_compaction_reduces_file_count(spark, sf_dir):
     _sink_compacted_roundtrip(spark, sf_dir).collect()
-    base = _scratch("compaction", sf_dir)
+    base = scratch_dir("compaction", sf_dir)
     sharded = glob.glob(f"{base}/sharded/part-*.parquet")
     compacted = glob.glob(f"{base}/compacted/part-*.parquet")
     assert len(sharded) == 64, len(sharded)
@@ -104,7 +104,7 @@ def test_clustered_write_files_cover_disjoint_date_ranges(spark, sf_dir):
     be disjoint from every other file's — the property that makes a
     date predicate skip non-overlapping files entirely."""
     _sink_clustered_write(spark, sf_dir).collect()
-    base = _scratch("clustered", sf_dir)
+    base = scratch_dir("clustered", sf_dir)
     spans = []
     for f in glob.glob(f"{base}/orders_clustered/part-*.parquet"):
         md = pq.ParquetFile(f).metadata
@@ -132,7 +132,7 @@ def test_clustered_read_prunes_files(spark, sf_dir):
     group level; assert via the simpler proxy that at least one file's
     span lies wholly outside the predicate window."""
     _sink_clustered_write(spark, sf_dir).collect()
-    base = _scratch("clustered", sf_dir)
+    base = scratch_dir("clustered", sf_dir)
     outside = 0
     for f in glob.glob(f"{base}/orders_clustered/part-*.parquet"):
         md = pq.ParquetFile(f).metadata
@@ -168,7 +168,7 @@ def test_lineage_one_file_per_leaf_partition(spark, sf_dir):
     the r16-flagged ~7."""
     rows = _src_file_lineage(spark, sf_dir).collect()
     assert rows and all(1 <= r["n_files"] <= 8 for r in rows), rows
-    base = _scratch("lineage", sf_dir)
+    base = scratch_dir("lineage", sf_dir)
     year_dirs = glob.glob(f"{base}/orders_by_year/order_year=*")
     assert len(year_dirs) == len(rows)
     by_year = {r["order_year"]: r["n_files"] for r in rows}
@@ -198,7 +198,7 @@ def test_zorder_write_prunes_on_both_dimensions(spark, sf_dir):
     import datetime
 
     _sink_zorder_write(spark, sf_dir).collect()
-    base = _scratch("zorder", sf_dir)
+    base = scratch_dir("zorder", sf_dir)
     boxes = []
     for f in glob.glob(f"{base}/orders_zorder/part-*.parquet"):
         md = pq.ParquetFile(f).metadata
@@ -237,12 +237,12 @@ def test_dynamic_partition_overwrite_leaves_other_partitions_untouched(
     """The dynamic overwrite must rewrite ONLY the 'P' partition: the
     'O' and 'F' directories keep their exact original files (same
     names), while 'P' gets new ones."""
-    from orchestrated_etl_spark.queries.ops_wave11 import (
+    from orchestrated_etl_spark.queries.io import (
         _sink_dynamic_partition_overwrite,
     )
 
     _sink_dynamic_partition_overwrite(spark, sf_dir).collect()
-    base = _scratch("dyn_overwrite", sf_dir)
+    base = scratch_dir("dyn_overwrite", sf_dir)
     path = f"{base}/orders_by_status"
 
     def files(status):

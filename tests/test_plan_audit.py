@@ -476,7 +476,7 @@ def test_source_rule_finds_sql_broadcast_hints():
     ) == [("f.py", 1, "x"), ("f.py", 1, "y"), ("f.py", 1, "z")]
     # the two allowlisted BM25 sites are bounded by construction
     assert SOURCE_SQL_HINT_OK[
-        ("orchestrated_etl_spark/queries/llm_search_quality.py", "d")
+        ("orchestrated_etl_spark/queries/text.py", "d")
     ][0] == 2
 
 
@@ -855,6 +855,49 @@ def test_front_rotation_names_registered():
     assert not no_oracle, f"_FRONT names without an oracle: {no_oracle}"
 
 
+def test_query_modules_are_one_per_family():
+    """queries/ holds one module per query family, and every registered
+    query lives in the module its name's prefix (the part before the
+    first ``_``) maps to; the TPC-H shapes ``sql_q<N>_*`` are their own
+    family."""
+    import re
+
+    from orchestrated_etl_spark import registry
+
+    families = {
+        "reference": "flagship books s3 s5 t2 t3 t4 t5 t6 a1 q1 j j1",
+        "sql": "sql json array string datetime",
+        "relational": "setop window join asof range topk rollup cube "
+        "grouping pivot distinct unpivot funnel ps cogroup table skyline "
+        "spatial",
+        "aggregates": "agg stats sample approx orders",
+        "events": "events sessionize",
+        "text": "text search udtf",
+        "dedup": "dedup er",
+        "similarity": "sim",
+        "graph": "graph",
+        "training": "train",
+        "multimodal": "mm",
+        "streaming": "stream",
+        "io": "src sink dq obs",
+    }
+    prefix = {p: f for f, ps in families.items() for p in ps.split()}
+
+    def family(name: str) -> str:
+        if re.match(r"sql_q\d+_", name):
+            return "tpch"
+        return prefix[name.split("_", 1)[0]]
+
+    misplaced = {
+        name: fn.__module__
+        for name, fn in registry.queries().items()
+        if fn.__module__ != f"orchestrated_etl_spark.queries.{family(name)}"
+    }
+    assert not misplaced, misplaced
+    modules = {p.stem for p in (PKG / "queries").glob("*.py")}
+    assert modules == {"__init__", "tpch", *families}, sorted(modules)
+
+
 def test_rotate_front_green_rule():
     """The staleness rotation counts only GREEN driver rows as
     freshness (round-8 advice): a failed sample must re-front the
@@ -1042,31 +1085,29 @@ def test_driver_side_materialization_allowlist():
     allowed `.collect()` sites are each a bounded driver fetch, never
     corpus data:
 
-    - wave13_round4.py ×2: 1-scalar BFS / shortest-path seed fetches
+    - queries/graph.py ×2: 1-scalar BFS / shortest-path seed fetches
       (an iterative algorithm's hyperparameter, not data).
-    - scale_ops.py ×1: 25-row fixture-prep loop for the binaryFile
-      source (dimension-sized, test-data setup).
-    - streaming_queries.py ×1: streaming memory-sink result poll (the
+    - sources/catalog.py ×1: 25-row fixture-prep loop for the
+      binaryFile source (dimension-sized, test-data setup).
+    - queries/streaming.py ×1: streaming memory-sink result poll (the
       sink IS driver-side by definition).
 
     `toPandas`/`toLocalIterator` are banned outright. Tokenized scan,
-    so docstrings/comments mentioning collect() don't count; _vendor/
-    (third-party protobuf) is excluded. Keys are package-relative paths
+    so docstrings/comments mentioning collect() don't count. Keys are
+    package-relative paths
     (not basenames) so a same-named file in another subpackage can't
     share a sibling's budget."""
     import tokenize
 
     allowed = {
-        "queries/wave13_round4.py": 2,
-        "queries/scale_ops.py": 1,
-        "queries/streaming_queries.py": 1,
+        "queries/graph.py": 2,
+        "sources/catalog.py": 1,
+        "queries/streaming.py": 1,
     }
     found: dict[str, int] = {}
     banned: list[tuple[str, int, str]] = []
     for path in sorted(PKG.rglob("*.py")):
         rel = path.relative_to(PKG).as_posix()
-        if rel.startswith("_vendor/"):
-            continue
         prev = None
         with open(path, "rb") as f:
             toks = list(tokenize.tokenize(f.readline))
@@ -1097,14 +1138,12 @@ def test_driver_side_materialization_allowlist():
 
 
 def test_stub_site_allowlist():
-    """Pin the package's stub surface to the two sites the repo
+    """Pin the package's stub surface to the one site the repo
     legitimately needs (previously a hand check each round):
 
     - functions/multimodal.py: the env-gated media DECODER raise — the
       container has no image/audio libs, the stub is the documented
       honest boundary and its deterministic fake path IS oracle-checked.
-    - streaming/stateful.py: a required-interface no-op (`pass` body
-      mandated by the processor ABC).
 
     Any new NotImplementedError or `pass` statement elsewhere is either
     padding (unfinished surface presented as done) or a new env gate
@@ -1119,8 +1158,6 @@ def test_stub_site_allowlist():
     bare: Counter[str] = Counter()
     for path in sorted(PKG.rglob("*.py")):
         rel = path.relative_to(PKG).as_posix()
-        if rel.startswith("_vendor/"):
-            continue
         with open(path, "rb") as f:
             for t in tokenize.tokenize(f.readline):
                 if t.type != tokenize.NAME:
@@ -1130,7 +1167,7 @@ def test_stub_site_allowlist():
                 elif t.string == "pass":
                     bare[rel] += 1
     assert nie == Counter({"functions/multimodal.py": 1}), dict(nie)
-    assert bare == Counter({"streaming/stateful.py": 1}), dict(bare)
+    assert bare == Counter(), dict(bare)
 
 
 def test_spark_connect_portability_exemptions_are_pinned():
@@ -1156,8 +1193,6 @@ def test_spark_connect_portability_exemptions_are_pinned():
     sites: Counter[str] = Counter()
     for path in sorted(PKG.rglob("*.py")):
         rel = path.relative_to(PKG).as_posix()
-        if rel.startswith("_vendor/"):
-            continue
         with open(path, "rb") as f:
             for t in tokenize.tokenize(f.readline):
                 if t.type == tokenize.NAME and t.string == "sparkContext":
@@ -1353,8 +1388,8 @@ def test_sample_queries_oversized_draw_is_usage_error():
 
 
 def test_broadcast_tables_are_fixed_domain():
-    """schemas.BROADCAST_TABLES feeds Catalog.dim()'s forced broadcast
-    hint, so membership IS a standing claim that the table's row count
+    """schemas.BROADCAST_TABLES names the tables that may carry a forced
+    broadcast hint, so membership IS a standing claim that the table's row count
     is fixed by the schema domain. Until round 16 it also listed
     supplier/customer/part — linearly-growing dimensions, the exact
     class the r14/r15 hint sweeps removed from every query — leaving a

@@ -14,9 +14,7 @@ def test_rfm_cutoff_rule_hand_graph(spark):
     """Histogram-derived quintile cutoffs: for values 1..10 (n=10),
     rank k_i = ceil(i*10/5) = 2,4,6,8 → cutoffs 2,4,6,8; score of v is
     1 + #cutoffs strictly below it."""
-    from orchestrated_etl_spark.queries.analytics_wave5 import (
-        _rfm_cutoff_1row,
-    )
+    from orchestrated_etl_spark.queries.events import _rfm_cutoff_1row
 
     df = spark.createDataFrame([(v,) for v in range(1, 11)], "v long")
     n_df = df.agg(F.count(F.lit(1)).alias("n"))
@@ -95,10 +93,7 @@ def test_semdedup_drops_planted_duplicate(spark, sf_dir):
 def test_ewma_fold_matches_python_loop(spark, sf_dir):
     """The array-fold EWMA equals the straightforward sequential Python
     recurrence, bit for bit, for every user."""
-    from orchestrated_etl_spark.queries.analytics_wave5 import (
-        _EWMA_ALPHA,
-        _ewma_fold,
-    )
+    from orchestrated_etl_spark.queries.events import _EWMA_ALPHA, _ewma_fold
     from orchestrated_etl_spark.sources.catalog import read_events
 
     got = {
@@ -129,9 +124,7 @@ def test_ewma_fold_matches_python_loop(spark, sf_dir):
 def test_locf_carries_last_purchase_only(spark):
     """LOCF: each event sees the most recent purchase value at-or-before
     it within its user; -1.0 before any purchase."""
-    from orchestrated_etl_spark.queries.sql_surface_wave12 import (
-        _locf_purchase_value,
-    )
+    from orchestrated_etl_spark.queries.relational import _locf_purchase_value
     import datetime as dt
 
     t0 = dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)
@@ -148,17 +141,17 @@ def test_locf_carries_last_purchase_only(spark):
         "event_id long, user_id long, ts timestamp_ntz, "
         "event_type string, value double",
     )
-    import orchestrated_etl_spark.queries.sql_surface_wave12 as W12
+    import orchestrated_etl_spark.queries.relational as Q
 
-    orig = W12.read_events
-    W12.read_events = lambda s, d: df
+    orig = Q.read_events
+    Q.read_events = lambda s, d: df
     try:
         got = {
             r["event_id"]: r["last_purchase_value"]
             for r in _locf_purchase_value(spark, "unused").collect()
         }
     finally:
-        W12.read_events = orig
+        Q.read_events = orig
     assert got == {1: -1.0, 2: 5.0, 3: 5.0, 4: 8.0, 5: 8.0, 6: -1.0}
 
 
@@ -168,7 +161,7 @@ def test_linear_interpolation_hand_series(spark):
     single observation spans no gap."""
     import datetime as dt
 
-    import orchestrated_etl_spark.queries.surface_wave4 as W4
+    import orchestrated_etl_spark.queries.sql as Q
 
     t = lambda d: dt.datetime(  # noqa: E731
         2024, 1, d, 12, 0, tzinfo=dt.timezone.utc
@@ -183,18 +176,18 @@ def test_linear_interpolation_hand_series(spark):
         "event_id long, user_id long, ts timestamp_ntz, "
         "event_type string, value double",
     )
-    orig = W4.read_events
-    W4.read_events = lambda s, d: df
+    orig = Q.read_events
+    Q.read_events = lambda s, d: df
     try:
         got = {
             (r["user_id"], r["day"].isoformat()): (
                 r["observed"],
                 r["interp_value"],
             )
-            for r in W4._linear_interpolate(spark, "unused").collect()
+            for r in Q._linear_interpolate(spark, "unused").collect()
         }
     finally:
-        W4.read_events = orig
+        Q.read_events = orig
     assert got[(1, "2024-01-01")] == (True, 10.0)
     assert got[(1, "2024-01-02")] == (False, 20.0)
     assert got[(1, "2024-01-03")] == (False, 30.0)

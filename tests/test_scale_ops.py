@@ -1,4 +1,4 @@
-"""Unit tests for scale_ops / training_pipeline semantics on tiny frames:
+"""Unit tests for scale-posture query semantics on tiny frames:
 as-of tie handling, range-join boundary inclusion, packing bin boundaries,
 and per-key sampling determinism."""
 
@@ -8,7 +8,7 @@ from datetime import datetime, timezone
 
 from pyspark.sql import functions as F
 
-from orchestrated_etl_spark.queries import scale_ops, training_pipeline  # noqa: F401
+from orchestrated_etl_spark.queries import aggregates, relational, training
 
 
 def _ts(s):
@@ -32,7 +32,7 @@ def test_asof_same_timestamp_click_counts(spark, tmp_path):
     ).parquet(f"{sf}/events.parquet")
     out = {
         r["event_id"]: r["last_click_ts"]
-        for r in scale_ops._asof(spark, sf).collect()
+        for r in relational._asof(spark, sf).collect()
     }
     # collect() renders LTZ as a NAIVE process-zone datetime; astimezone
     # treats a naive value as process-local, so this compares the INSTANT
@@ -54,13 +54,13 @@ def test_range_join_boundaries(spark, tmp_path):
     df.withColumn("value", F.lit(0.0)).withColumn("props", F.lit("{}")).write.mode(
         "overwrite"
     ).parquet(f"{sf}/events.parquet")
-    [row] = scale_ops._range_join(spark, sf).collect()
+    [row] = relational._range_join(spark, sf).collect()
     assert row["clicks_1h"] == 2
 
 
 def test_sampling_is_deterministic_per_key(spark, sf_dir):
-    a = {r["o_orderkey"] for r in scale_ops._sample_hash(spark, sf_dir).collect()}
-    b = {r["o_orderkey"] for r in scale_ops._sample_hash(spark, sf_dir).collect()}
+    a = {r["o_orderkey"] for r in aggregates._sample_hash(spark, sf_dir).collect()}
+    b = {r["o_orderkey"] for r in aggregates._sample_hash(spark, sf_dir).collect()}
     assert a == b and len(a) > 0
     # roughly 10% (loose bound; hash is coarse but unbiased enough for this)
     total = spark.read.parquet(f"{sf_dir}/orders.parquet").count()
@@ -79,7 +79,7 @@ def test_token_packing_respects_budget_boundary(spark, tmp_path):
     df.write.mode("overwrite").parquet(f"{sf}/documents.parquet")
     out = {
         r["doc_id"]: r["bin_id"]
-        for r in training_pipeline._token_packing(spark, sf).collect()
+        for r in training._token_packing(spark, sf).collect()
     }
     assert out == {0: 0, 1: 0, 2: 0, 3: 1, 4: 1, 5: 2}
 
@@ -91,7 +91,7 @@ def test_cap_per_source_keeps_lowest_ids(spark, tmp_path):
     )
     sf = str(tmp_path)
     df.write.mode("overwrite").parquet(f"{sf}/documents.parquet")
-    out = training_pipeline._cap_per_source(spark, sf)
+    out = training._cap_per_source(spark, sf)
     per = out.groupBy("source").count().collect()
     assert all(r["count"] == 15 for r in per)
     # deterministic choice: the 15 lowest doc_ids per source
@@ -102,7 +102,7 @@ def test_cap_per_source_keeps_lowest_ids(spark, tmp_path):
 def test_bucketed_join_has_no_prejoin_shuffle(spark, sf_dir):
     """Bucketed layouts satisfy the join distribution → the only Exchange
     in the plan is the post-join aggregate's."""
-    from orchestrated_etl_spark.queries.scale_ops import _bucketed_join
+    from orchestrated_etl_spark.queries.relational import _bucketed_join
 
     # Disable broadcast so the join must satisfy its distribution
     # requirement from the bucketed layout (at real scale neither side
@@ -120,7 +120,7 @@ def test_bucketed_join_has_no_prejoin_shuffle(spark, sf_dir):
 
 
 def test_chunking_covers_text_with_overlap(spark, sf_dir):
-    from orchestrated_etl_spark.queries.training_pipeline import _chunk_documents
+    from orchestrated_etl_spark.queries.training import _chunk_documents
 
     chunks = _chunk_documents(spark, sf_dir)
     # every chunk except a doc's last has exactly 64 tokens; strides overlap by 16
@@ -156,7 +156,7 @@ def test_exists_subquery_decorrelates_to_semi_join(spark, sf_dir):
     """Correlated EXISTS (sql_q4 shape) must become a left-semi join in
     the physical plan — never a per-row subquery — or it cannot run on a
     large fact table."""
-    from orchestrated_etl_spark.queries.sql_subqueries import _q4_exists
+    from orchestrated_etl_spark.queries.tpch import _q4_exists
 
     plan = _q4_exists(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
     assert "LeftSemi" in plan, plan
@@ -166,7 +166,7 @@ def test_scalar_subquery_decorrelates_to_agg_join(spark, sf_dir):
     """Correlated scalar aggregate (sql_q17 shape) must decorrelate to a
     per-key aggregate joined back — the plan contains an aggregate over
     l_partkey and no unresolved per-row subquery node."""
-    from orchestrated_etl_spark.queries.sql_subqueries import _q17_below_avg
+    from orchestrated_etl_spark.queries.tpch import _q17_below_avg
 
     plan = _q17_below_avg(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
     # decorrelated: an aggregate keyed on l_partkey feeds a join
@@ -177,7 +177,7 @@ def test_scalar_subquery_decorrelates_to_agg_join(spark, sf_dir):
 def test_array_hof_profile_is_map_only(spark, sf_dir):
     """HOF per-vector profile: no explode, no exchange — a single
     map-only stage per scan partition."""
-    from orchestrated_etl_spark.queries.sql_subqueries import _array_hof
+    from orchestrated_etl_spark.queries.sql import _array_hof
 
     plan = _array_hof(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
     assert "Generate" not in plan, plan  # no explode
@@ -293,7 +293,7 @@ def test_q18_in_subquery_becomes_semi_join(spark, sf_dir):
     """Q18's IN-over-grouped-HAVING must execute as a left-semi join
     against the pre-aggregated qualifying keys — the fact table is
     aggregated once, never re-scanned per outer row."""
-    from orchestrated_etl_spark.queries.sql_tpch_more import _q18_large_orders
+    from orchestrated_etl_spark.queries.tpch import _q18_large_orders
 
     plan = (
         _q18_large_orders(spark, sf_dir)
@@ -306,7 +306,7 @@ def test_q19_disjunction_keeps_hash_join(spark, sf_dir):
     """Q19's OR-of-ANDs predicate must not degrade the equi-join: the
     common p_partkey = l_partkey conjunct stays the hash-join key and the
     disjunction evaluates as a residual filter (no cartesian product)."""
-    from orchestrated_etl_spark.queries.sql_tpch_more import _q19_disjunctive
+    from orchestrated_etl_spark.queries.tpch import _q19_disjunctive
 
     plan = (
         _q19_disjunctive(spark, sf_dir)
@@ -320,9 +320,7 @@ def test_q10_topk_avoids_global_sort(spark, sf_dir):
     """Q10's ORDER BY revenue LIMIT 20 must plan as TakeOrderedAndProject
     (k rows per partition to the driver), not a full global Sort — the
     difference between shipping 20 rows and shipping every group."""
-    from orchestrated_etl_spark.queries.sql_tpch_more import (
-        _q10_returned_revenue,
-    )
+    from orchestrated_etl_spark.queries.tpch import _q10_returned_revenue
 
     plan = (
         _q10_returned_revenue(spark, sf_dir)
@@ -336,9 +334,7 @@ def test_q6_filters_reach_parquet_scan(spark, sf_dir):
     bound must appear as PushedFilters on the parquet scan, not as a
     post-scan Filter-only plan — at 100 TB this is the difference between
     reading a year and reading everything."""
-    from orchestrated_etl_spark.queries.sql_tpch_wave3 import (
-        _q6_forecast_revenue,
-    )
+    from orchestrated_etl_spark.queries.tpch import _q6_forecast_revenue
 
     plan = (
         _q6_forecast_revenue(spark, sf_dir)
@@ -351,9 +347,7 @@ def test_q21_exists_chain_becomes_semi_then_anti(spark, sf_dir):
     """Q21's EXISTS and NOT EXISTS self-joins must plan as a left-semi
     and a left-anti join on l_orderkey — never a per-row subquery or a
     nested loop over the fact table."""
-    from orchestrated_etl_spark.queries.sql_tpch_wave3 import (
-        _q21_waiting_supplier,
-    )
+    from orchestrated_etl_spark.queries.tpch import _q21_waiting_supplier
 
     plan = (
         _q21_waiting_supplier(spark, sf_dir)
@@ -368,7 +362,7 @@ def test_q13_outer_join_preserves_orderless_customers(spark, sf_dir):
     plan, and the count histogram contains a c_count=0 bucket whenever
     some customer has only '5-LOW' orders (filter sits in the join
     condition, not a pre-filter that would drop the customer row)."""
-    from orchestrated_etl_spark.queries.sql_tpch_wave3 import (
+    from orchestrated_etl_spark.queries.tpch import (
         _q13_order_count_distribution,
     )
 
@@ -384,9 +378,7 @@ def test_q7_pair_disjunction_keeps_hash_joins(spark, sf_dir):
     """Q7's symmetric two-nation disjunction is a residual filter on
     already-joined rows — all five joins must stay hash joins (no
     cartesian product, no nested loop)."""
-    from orchestrated_etl_spark.queries.sql_tpch_wave3 import (
-        _q7_volume_shipping,
-    )
+    from orchestrated_etl_spark.queries.tpch import _q7_volume_shipping
 
     plan = (
         _q7_volume_shipping(spark, sf_dir)
@@ -400,7 +392,7 @@ def test_dpp_join_prunes_fact_partitions(spark, sf_dir):
     """The dim filter must reach the partitioned fact scan as a runtime
     dynamic-partition-pruning subquery — reading only the surviving
     status directories is the entire point of the layout."""
-    from orchestrated_etl_spark.queries.scale_ops import _dpp_join
+    from orchestrated_etl_spark.queries.relational import _dpp_join
 
     plan = (
         _dpp_join(spark, sf_dir)
@@ -478,7 +470,7 @@ def test_salted_asof_matches_unsalted_and_salts_exchange(spark, sf_dir):
     result, and its physical plan partitions the event window by
     (user_id, day) — the salt key is IN the exchange, so no partition
     ever holds more than one user-day of history."""
-    from orchestrated_etl_spark.queries.scale_ops import _asof, _asof_salted
+    from orchestrated_etl_spark.queries.relational import _asof, _asof_salted
 
     plain = {
         (r["event_id"], r["last_click_ts"]) for r in _asof(spark, sf_dir).collect()
@@ -504,7 +496,7 @@ def test_salted_asof_bucket_boundary_semantics(spark):
     import shutil
     import tempfile
 
-    from orchestrated_etl_spark.queries.scale_ops import _asof, _asof_salted
+    from orchestrated_etl_spark.queries.relational import _asof, _asof_salted
 
     D1, D2 = dt.datetime(2025, 3, 1), dt.datetime(2025, 3, 2)  # naive-ntz-ok
     rows = [
@@ -632,7 +624,7 @@ def test_binned_range_join_partitions_by_bin(spark, sf_dir):
     instead of by one user's full history once the join goes sort-merge
     at scale — and the result must equal the plain range join's
     exactly."""
-    from orchestrated_etl_spark.queries.scale_ops import (
+    from orchestrated_etl_spark.queries.relational import (
         _range_join,
         _range_join_binned,
     )
@@ -665,7 +657,7 @@ def test_stratified_sample_windows_are_salted_and_bounded(spark, sf_dir):
     (c) produce the IDENTICAL relation to the naive one-window form."""
     from pyspark.sql import Window
 
-    from orchestrated_etl_spark.queries.scale_ops import (
+    from orchestrated_etl_spark.queries.aggregates import (
         _STRAT_K,
         _STRAT_SALTS,
         _bucket,
@@ -712,7 +704,7 @@ def test_scd2_update_join_not_force_broadcast(spark, sf_dir):
     must NOT broadcast (a forced hint would override the conf); with
     defaults the small fixture batch still broadcasts via the
     threshold, which is the intended small-batch fast path."""
-    from orchestrated_etl_spark.queries.scale_ops import _scd2_history
+    from orchestrated_etl_spark.queries.io import _scd2_history
 
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")

@@ -7,7 +7,7 @@ from datetime import datetime, timezone
 
 from pyspark.sql import functions as F
 
-from orchestrated_etl_spark.queries import surface_wave4
+from orchestrated_etl_spark.queries import relational, sql, training
 
 
 def _ts(s):
@@ -49,7 +49,7 @@ def test_funnel_requires_strict_stage_order(spark, tmp_path):
         (9, 4, _ts("2024-01-01T09:00:00"), "purchase"),
     ]
     sf = _write_events(spark, tmp_path, rows)
-    row = surface_wave4._funnel(spark, sf).collect()[0]
+    row = relational._funnel(spark, sf).collect()[0]
     assert row["n_users"] == 4
     assert row["n_viewed"] == 3
     assert row["n_clicked_after_view"] == 2  # users 1 and 3
@@ -66,7 +66,7 @@ def test_gap_fill_emits_missing_days_and_forward_fills(spark, tmp_path):
     sf = _write_events(spark, tmp_path, rows)
     out = {
         str(r["day"]): (r["day_value"], r["filled_value"])
-        for r in surface_wave4._gap_fill(spark, sf).collect()
+        for r in sql._gap_fill(spark, sf).collect()
     }
     assert set(out) == {"2024-01-01", "2024-01-02", "2024-01-03"}
     assert out["2024-01-02"] == (0.0, 1.0)  # spine row, forward-filled
@@ -82,11 +82,11 @@ def test_split_assignment_is_deterministic_and_exhaustive(spark, tmp_path):
     docs.write.mode("overwrite").parquet(f"{sf}/documents.parquet")
     a = {
         (r["split"], r["lang"]): r["n_docs"]
-        for r in surface_wave4._split_assignment(spark, sf).collect()
+        for r in training._split_assignment(spark, sf).collect()
     }
     b = {
         (r["split"], r["lang"]): r["n_docs"]
-        for r in surface_wave4._split_assignment(spark, sf).collect()
+        for r in training._split_assignment(spark, sf).collect()
     }
     assert a == b  # rerun-stable
     assert sum(a.values()) == 200  # every doc assigned exactly once
@@ -99,9 +99,7 @@ def test_shuffle_hash_hint_changes_physical_strategy(spark, sf_dir):
     (not broadcast — the filtered orders side would otherwise broadcast
     at this scale, and not sort-merge); the query's RESULT is strategy-
     independent, which is what its oracle checks."""
-    from orchestrated_etl_spark.queries.sql_surface_wave12 import (
-        _shuffle_hash_hint,
-    )
+    from orchestrated_etl_spark.queries.relational import _shuffle_hash_hint
 
     plan = (
         _shuffle_hash_hint(spark, sf_dir)

@@ -207,7 +207,7 @@ def test_dst_transition_bucketing_session_tz_invariant(spark):
 
 def test_date_trunc_on_ntz_is_session_zone_dependent_canary(spark):
     """CANARY pinning WHY the repo bans date_trunc on TIMESTAMP_NTZ
-    (relational.py:428, scale_ops.py:306): Spark 4 interprets the NTZ
+    (queries/sql.py _date_trunc_daily): Spark 4 interprets the NTZ
     value in the SESSION zone and returns an LTZ instant. Two measured
     consequences, both asserted zone-free (epoch seconds / server-side
     strings, so the assertions hold under any host or process TZ —
@@ -282,8 +282,8 @@ def test_binned_range_join_dst_session_tz_invariant(spark):
     _DST_ZONES."""
     import datetime as dt
 
-    from orchestrated_etl_spark.queries.scale_ops import (
-        _range_join,  # noqa: F401  (semantics twin, core used below)
+    from orchestrated_etl_spark.queries.relational import (  # noqa: F401
+        _range_join,
         range_join_binned_core,
     )
 

@@ -26,9 +26,7 @@ def test_q2_correlated_min_decorrelates(spark, sf_dir):
     key — at scale a per-row subquery execution would be O(parts ×
     suppliers). The executed plan therefore contains a min aggregate and
     NO per-row scalar-subquery node."""
-    from orchestrated_etl_spark.queries.sql_tpch_wave8 import (
-        _q2_min_cost_supplier,
-    )
+    from orchestrated_etl_spark.queries.tpch import _q2_min_cost_supplier
 
     plan = _plan(_q2_min_cost_supplier(spark, sf_dir))
     assert "min(" in plan, plan
@@ -39,9 +37,7 @@ def test_q16_not_in_is_anti_join(spark, sf_dir):
     """NOT IN must plan as a (null-aware) anti-join, and the distinct
     supplier count must go through the two-phase distinct expansion —
     both visible in the executed plan."""
-    from orchestrated_etl_spark.queries.sql_tpch_wave8 import (
-        _q16_supplier_diversity,
-    )
+    from orchestrated_etl_spark.queries.tpch import _q16_supplier_diversity
 
     plan = _plan(_q16_supplier_diversity(spark, sf_dir))
     assert "LeftAnti" in plan, plan
@@ -52,9 +48,7 @@ def test_q20_nested_in_is_semi_join_chain(spark, sf_dir):
     """Both IN-subqueries (supplier IN …, part IN …) must become
     left-semi joins — two of them in one plan, never a distinct
     materialization or per-row evaluation."""
-    from orchestrated_etl_spark.queries.sql_tpch_wave8 import (
-        _q20_excess_availability,
-    )
+    from orchestrated_etl_spark.queries.tpch import _q20_excess_availability
 
     plan = _plan(_q20_excess_availability(spark, sf_dir))
     assert plan.count("LeftSemi") >= 2, plan
@@ -67,9 +61,7 @@ def test_bm25_query_is_posting_lookup_over_staged_index(spark, sf_dir):
     scans, with stats arriving as scalar subqueries rather than a re-
     derivation. (Round 2's one-shot plan re-derived corpus stats per
     query: 6 scans.)"""
-    from orchestrated_etl_spark.queries.llm_search_quality import (
-        _search_bm25_topk,
-    )
+    from orchestrated_etl_spark.queries.text import _search_bm25_topk
 
     import re
 
@@ -108,9 +100,7 @@ def test_bm25_matches_hand_computation(spark, tmp_path):
             (3, "other words here", "en", "s"),  # no match
         ],
     )
-    from orchestrated_etl_spark.queries.llm_search_quality import (
-        _search_bm25_topk,
-    )
+    from orchestrated_etl_spark.queries.text import _search_bm25_topk
 
     out = {
         r["doc_id"]: r["score"] for r in _search_bm25_topk(spark, sf).collect()
@@ -142,9 +132,7 @@ def test_incremental_dedup_drops_known_content(spark, tmp_path):
             (2, "other history", "en", "s"),  # history
         ],
     )
-    from orchestrated_etl_spark.queries.llm_search_quality import (
-        _incremental_dedup,
-    )
+    from orchestrated_etl_spark.queries.training import _incremental_dedup
 
     kept = [r["doc_id"] for r in _incremental_dedup(spark, sf).collect()]
     assert kept == [10]
@@ -164,9 +152,7 @@ def test_quality_gate_per_rule_attribution(spark, tmp_path):
             (3, " ".join(["word"] * 30), "en", "s"),  # no stopword, repetitive
         ],
     )
-    from orchestrated_etl_spark.queries.llm_search_quality import (
-        _quality_gopher_gate,
-    )
+    from orchestrated_etl_spark.queries.training import _quality_gopher_gate
 
     row = _quality_gopher_gate(spark, sf).collect()[0]
     assert row["n_docs"] == 3
@@ -187,9 +173,7 @@ def test_tfidf_rank_ties_break_alphabetically(spark, tmp_path):
             (2, "unrelated words entirely here now", "en", "s"),
         ],
     )
-    from orchestrated_etl_spark.queries.llm_search_quality import (
-        _tfidf_keywords,
-    )
+    from orchestrated_etl_spark.queries.text import _tfidf_keywords
 
     rows = [
         (r["rank"], r["term"])
@@ -206,7 +190,7 @@ def test_bm25_bucketed_store_prunes_buckets(spark, sf_dir):
     checkpoint-staged index."""
     import re
 
-    from orchestrated_etl_spark.queries.llm_search_quality import (
+    from orchestrated_etl_spark.queries.text import (
         _search_bm25_store_bucketed,
         _search_bm25_topk,
     )

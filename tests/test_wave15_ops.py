@@ -28,9 +28,7 @@ def _write_lineitem(spark, tmp_path) -> str:
 
 
 def test_clustering_coefficient_planted(spark, tmp_path):
-    from orchestrated_etl_spark.queries.wave15_round4 import (
-        _clustering_coefficient,
-    )
+    from orchestrated_etl_spark.queries.graph import _clustering_coefficient
 
     sf_dir = _write_lineitem(spark, tmp_path)
     out = {
@@ -48,7 +46,7 @@ def test_clustering_coefficient_planted(spark, tmp_path):
 
 
 def test_hits_2iter_planted(spark, tmp_path):
-    from orchestrated_etl_spark.queries.wave15_round4 import _hits_2iter
+    from orchestrated_etl_spark.queries.graph import _hits_2iter
 
     sf_dir = _write_lineitem(spark, tmp_path)
     out = {
@@ -92,9 +90,7 @@ def test_cusum_changepoint_planted_level_shift(spark, tmp_path):
     N*c-S is -8 before and +8 after the shift; the scaled CUSUM walks
     -8,-16,-24,-32 then recovers to 0, peaking exactly at the last
     pre-shift day."""
-    from orchestrated_etl_spark.queries.wave15_round4 import (
-        _cusum_changepoint,
-    )
+    from orchestrated_etl_spark.queries.events import _cusum_changepoint
 
     rows, eid = [], 0
     for day in range(1, 5):
@@ -121,7 +117,7 @@ def test_cusum_changepoint_planted_level_shift(spark, tmp_path):
 def test_acf_planted_period2_series(spark, tmp_path):
     """Alternating 10/20 daily revenue: every lag-1 pair lies exactly
     on y = 30 - x (r = -1) and every lag-2 pair on y = x (r = +1)."""
-    from orchestrated_etl_spark.queries.wave15_round4 import _acf_lags
+    from orchestrated_etl_spark.queries.events import _acf_lags
 
     rows = [
         _event(d, d, "purchase", 10.0 if d % 2 else 20.0)
@@ -150,7 +146,7 @@ def test_countmin_estimate_matches_python_replica(spark, tmp_path):
     Python with the same hash family, and require the operator's
     estimates to equal the replica's EXACTLY (collision-agnostic: if
     keys collide in a bucket the replica overcounts identically)."""
-    from orchestrated_etl_spark.queries.wave15_round4 import (
+    from orchestrated_etl_spark.queries.aggregates import (
         _CM_HASHES,
         _CM_P,
         _CM_W,
@@ -228,7 +224,7 @@ def test_cdc_chunks_matches_python_replica(spark, tmp_path):
     offsets; a third is disjoint. The mini-oracle recomputes chunking
     and sharing in Python; the operator must agree exactly, and the
     content-defined property must surface the shared passage."""
-    from orchestrated_etl_spark.queries.wave15_round4 import _cdc_chunks
+    from orchestrated_etl_spark.queries.dedup import _cdc_chunks
 
     shared = "the quick brown fox jumps over the lazy dog again and " * 5
     doc_a = "PREFIX-ALPHA " * 4 + shared + " SUFFIX-OMEGA" * 3
@@ -278,7 +274,7 @@ def test_chi2_materializes_zero_cells(spark, tmp_path):
     appear with its full expected count (a naive GROUP BY drops it and
     understates chi2); the folded total must equal the same IEEE
     left-fold in Python."""
-    from orchestrated_etl_spark.queries.wave15_round4 import (
+    from orchestrated_etl_spark.queries.aggregates import (
         _chi2_cells,
         _chi2_total,
     )
@@ -314,7 +310,7 @@ def test_km_survival_planted_censoring(spark, tmp_path):
     (duration 0), a delayed conversion, a never-converter censored at
     the horizon, and a user whose only purchase PRECEDES their click
     (must count as censored, not converted)."""
-    from orchestrated_etl_spark.queries.wave15_round4 import _km_survival
+    from orchestrated_etl_spark.queries.events import _km_survival
 
     rows = [
         _event(1, 1, "click", user=1),
@@ -345,7 +341,7 @@ def test_km_survival_planted_censoring(spark, tmp_path):
 def test_holt_linear_matches_python_recurrence(spark, tmp_path):
     """Spark's struct-accumulator fold must replay the exact Holt
     recurrence (alpha=1/2, gamma=1/4, init l=x1, b=0) bit-for-bit."""
-    from orchestrated_etl_spark.queries.wave15_round4 import _holt_linear
+    from orchestrated_etl_spark.queries.events import _holt_linear
 
     xs = [100.0, 110.0, 90.0, 130.0, 120.0]
     rows = [
@@ -372,7 +368,7 @@ def test_countmin_merge_identity(spark, tmp_path):
     bitmap OR-merge the same counts as direct distinct)."""
     import datetime as dt
 
-    from orchestrated_etl_spark.queries.wave15_round4 import (
+    from orchestrated_etl_spark.queries.aggregates import (
         _bitmap_distinct,
         _bitmap_rollup_quarters,
         _countmin_estimate,
@@ -420,7 +416,7 @@ def test_nfd_packing_planted(spark, tmp_path):
     """Hand-computed next-fit-decreasing: tokens [300,300,200,100,12]
     into cap-512 bins -> 3 bins (300 | 300+200 | 100+12), lower bound
     2 (total 912)."""
-    from orchestrated_etl_spark.queries.wave15_round4 import (
+    from orchestrated_etl_spark.queries.training import (
         _NFD_CAP,
         _pack_nfd_bins,
     )
@@ -458,15 +454,17 @@ def test_growing_relation_joins_not_force_broadcast(spark, sf_dir):
     because the lazy localCheckpoint subtree prints under both of its
     consumers; scalar crossJoin broadcasts surface as
     BroadcastNestedLoopJoin, which this check deliberately ignores)."""
-    from orchestrated_etl_spark.queries.wave15_round4 import (
+    from orchestrated_etl_spark.queries.aggregates import (
         _basket_lift,
-        _cdc_chunks,
         _gini_revenue,
+    )
+    from orchestrated_etl_spark.queries.dedup import _cdc_chunks
+    from orchestrated_etl_spark.queries.graph import (
         _graph_modularity,
         _hits_2iter,
-        _pmi_collocations,
-        _scd2_point_in_time,
     )
+    from orchestrated_etl_spark.queries.relational import _scd2_point_in_time
+    from orchestrated_etl_spark.queries.text import _pmi_collocations
 
     expected = [
         (_hits_2iter, 0),

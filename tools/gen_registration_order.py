@@ -1,23 +1,14 @@
-"""Freeze the canonical query registration order to a committed artifact.
+"""Update the committed query registration order, ``REGISTRATION_ORDER.txt``.
 
-``registry.registration_order()`` — the staleness-rotation tie-break —
-is dict insertion order, canonical only from a FRESH interpreter
-(registry.py documents the hazard: pytest's direct query-module imports
-permute it). Until round 10 the canonical sequence therefore lived in
-process state; this tool writes it to ``REGISTRATION_ORDER.txt`` at the
-repo root so `_FRONT` is auditable from committed files alone:
+The registry orders ``queries()`` / ``oracle_sql()`` by this artifact
+(``_FRONT`` first, then the remaining names in line order), and it is
+the staleness-rotation tie-break ``tools/rotate_front.py`` reads. The
+update is append-only: existing lines keep their order, names of
+queries that are no longer registered are dropped, and newly registered
+names are appended. ``registry.registration_order()`` raises with a
+pointer here when the membership drifts.
 
-- ``tools/rotate_front.py`` reads the artifact (falling back to a live
-  computation only if it is absent),
-- ``registry.registration_order()`` validates live membership against
-  it (set equality — order-insensitive, so it is safe to call from
-  pytest's permuted import state),
-- a pytest contract re-derives the full ordered sequence in a fresh
-  subprocess interpreter and compares it to the file line-by-line.
-
-Run STANDALONE (never from pytest): python tools/gen_registration_order.py
-Regenerate whenever a query is registered or removed; the registry
-raises with a pointer here if the membership drifts.
+Usage: python tools/gen_registration_order.py
 """
 
 from __future__ import annotations
@@ -32,25 +23,20 @@ from orchestrated_etl_spark import registry  # noqa: E402
 
 HEADER = """\
 # Canonical query registration order (staleness-rotation tie-break).
-# Generated by tools/gen_registration_order.py from a fresh interpreter;
-# do not edit by hand. One query name per line, registration sequence.
+# Maintained by tools/gen_registration_order.py (append-only); do not
+# edit by hand. One query name per line, registration sequence.
 """
 
 
 def main() -> None:
-    if "pytest" in sys.modules:
-        raise SystemExit("run standalone — pytest permutes import order")
-    # Bypass registration_order()'s stale-artifact validation: this tool
-    # IS the regeneration path its RuntimeError points to, so calling
-    # the validating accessor here would deadlock after any registry
-    # add/remove (the artifact could never be rewritten without first
-    # deleting it by hand — round-10 advice). Read the live dict
-    # directly; membership validation stays strict everywhere else.
+    # The live dict, not registration_order(): that accessor raises on
+    # exactly the drift this tool repairs.
     registry._load_all()
-    names = list(registry._QUERIES)
-    out = REPO / "REGISTRATION_ORDER.txt"
-    out.write_text(HEADER + "\n".join(names) + "\n")
-    print(f"wrote {len(names)} names to {out}")
+    live = list(registry._QUERIES)
+    kept = [n for n in registry.frozen_registration_order() if n in live]
+    names = kept + [n for n in live if n not in kept]
+    registry._ORDER_FILE.write_text(HEADER + "\n".join(names) + "\n")
+    print(f"wrote {len(names)} names to {registry._ORDER_FILE}")
 
 
 if __name__ == "__main__":

@@ -11,10 +11,10 @@ paste-ready Python list literal, removing the transcription step (the
 registry contract test catches names that don't exist, but only this
 recomputation establishes "stalest").
 
-The tie-break uses ``registry.registration_order()`` (the raw
-registration sequence), NOT ``queries()`` iteration order — the latter
-fronts the current ``_FRONT`` first, which would corrupt the tie-break
-in a driver-skip round where front members stay stale.
+The tie-break uses ``registry.registration_order()`` (the committed
+REGISTRATION_ORDER.txt sequence), NOT ``queries()`` iteration order —
+the latter fronts the current ``_FRONT`` first, which would corrupt the
+tie-break in a driver-skip round where front members stay stale.
 
 Usage: python tools/rotate_front.py
 Then paste the output over `_FRONT` in orchestrated_etl_spark/registry.py,
@@ -70,18 +70,9 @@ def main() -> None:
             for name, row in json.load(f).items():
                 if _green(row):
                     last[name] = max(last.get(name, 0), rnd)
-    frozen = registry.frozen_registration_order()
-    if frozen is None:
-        print("# NOTE: REGISTRATION_ORDER.txt absent — tie-break from live "
-              "import order (fresh interpreter required)", file=sys.stderr)
-        order_names = registry.registration_order()
-    else:
-        # Committed artifact: auditable from files alone, and immune to
-        # import-order permutation. registration_order() validates live
-        # membership against it, so drift raises rather than skewing.
-        registry.registration_order()
-        order_names = frozen
-    reg_order = {n: i for i, n in enumerate(order_names)}
+    reg_order = {
+        n: i for i, n in enumerate(registry.registration_order())
+    }
     oracles = registry.oracle_sql()
     oracle_names = [n for n in reg_order if n in oracles]
     unsampled = [n for n in oracle_names if n not in last]
